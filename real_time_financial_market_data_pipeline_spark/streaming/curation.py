@@ -86,6 +86,7 @@ from real_time_financial_market_data_pipeline_spark.streaming.incremental import
     span_stats_view,
     stored_span_k,
 )
+from real_time_financial_market_data_pipeline_spark.streaming.sinks import overlap
 
 
 # snapshot-dir marker naming the committed generations a published
@@ -201,9 +202,6 @@ class CuratedCorpusPipeline:
     # pass): size to expected micro-batch volume, None leaves the
     # session conf untouched.
     shuffle_partitions: int | None = 8
-    # opt-in per-batch stage profiling, forwarded to the ingest job —
-    # see IncrementalDedupJob.stage_timer (round-15 VERDICT task 4)
-    stage_timer: object | None = None
 
     def __post_init__(self) -> None:
         """Fail-fast config validation (round-14 ADVICE, low): an
@@ -265,7 +263,6 @@ class CuratedCorpusPipeline:
             monotone_ids=self.monotone_ids,
             trigger=self.trigger,
             shuffle_partitions=self.shuffle_partitions,
-            stage_timer=self.stage_timer,
         )
 
     def start(self, docs: DataFrame) -> StreamingQuery:
@@ -925,23 +922,17 @@ class CuratedCorpusPipeline:
         # lands, so overlapping them on a thread pool (round-20
         # optimization pass) changes nothing about the crash protocol;
         # the docs marker write stays strictly after both.
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            futs = [
-                pool.submit(
-                    lambda: frame.write.mode("overwrite")
-                    .partitionBy("split")
-                    .parquet(os.path.join(out_path, f"gen={gen}"))
+        overlap(
+            spark,
+            [
+                lambda: frame.write.mode("overwrite")
+                .partitionBy("split")
+                .parquet(os.path.join(out_path, f"gen={gen}")),
+                lambda: spans_now.write.mode("overwrite").parquet(
+                    self._state_dir("spans", f"gen={gen}")
                 ),
-                pool.submit(
-                    lambda: spans_now.write.mode("overwrite").parquet(
-                        self._state_dir("spans", f"gen={gen}")
-                    )
-                ),
-            ]
-            for fut in futs:
-                fut.result()
+            ],
+        )
         gen_docs.write.mode("overwrite").parquet(
             self._state_dir("docs", f"gen={gen}")
         )
@@ -1119,25 +1110,19 @@ class CuratedCorpusPipeline:
         # (fold gen invisible until the docs marker + manifest land):
         # overlap them, docs marker strictly after — same round-20
         # pattern as finalize()'s gen writes.
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            futs = [
-                pool.submit(
-                    lambda: view.write.mode("overwrite")
-                    .partitionBy("split")
-                    .parquet(os.path.join(self.curated_dir(), f"gen={fold_gen}"))
-                ),
-                pool.submit(
-                    lambda: spark.read.parquet(
-                        self._state_dir("spans", f"gen={committed[-1]}")
-                    )
-                    .write.mode("overwrite")
-                    .parquet(self._state_dir("spans", f"gen={fold_gen}"))
-                ),
-            ]
-            for fut in futs:
-                fut.result()
+        overlap(
+            spark,
+            [
+                lambda: view.write.mode("overwrite")
+                .partitionBy("split")
+                .parquet(os.path.join(self.curated_dir(), f"gen={fold_gen}")),
+                lambda: spark.read.parquet(
+                    self._state_dir("spans", f"gen={committed[-1]}")
+                )
+                .write.mode("overwrite")
+                .parquet(self._state_dir("spans", f"gen={fold_gen}")),
+            ],
+        )
         all_docs.distinct().write.mode("overwrite").parquet(
             self._state_dir("docs", f"gen={fold_gen}")
         )

@@ -17,10 +17,6 @@ equi-join against:
                  once per doc (sigs_layout 2, round-21: one write
                  action + one directory listing/read fewer per batch
                  than the separate table)
-  index_sigs/    LEGACY (sigs_layout 1, corpora built before round 21):
-                 batch_id=N dirs of (id, sig) — such corpora keep this
-                 separate table on both the write and read paths for
-                 their whole lifetime; no data migration
   index_spanfps/ (span_index=True) batch_id=N dirs of per-fingerprint
                  partial span stats — common_spans/excision against the
                  growing corpus without re-fingerprinting history
@@ -58,8 +54,6 @@ motivation as the gold sink's auto-compaction.
 from __future__ import annotations
 
 import os
-import time
-from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Window
@@ -71,77 +65,7 @@ from real_time_financial_market_data_pipeline_spark.operators.dedup import (
     banded_signatures,
     signature_jaccard,
 )
-
-
-class StageTimer:
-    """Opt-in wall-clock accumulator for the per-batch segments of
-    IncrementalDedupJob.process() (round-15 VERDICT task 4: the curated
-    drain is the single biggest bench line and never had a per-stage
-    breakdown).  Segments are bounded by the batch's ACTION points —
-    Spark is lazy, so each segment's wall time includes every
-    transformation that action materializes (e.g. `corpus_write`
-    executes the exact-dedup and near-dup anti-joins).  Zero cost when
-    not attached (the job's default); attach via
-    IncrementalDedupJob(stage_timer=StageTimer()) or
-    CuratedCorpusPipeline(stage_timer=...)."""
-
-    def __init__(self) -> None:
-        self.times: dict[str, float] = {}
-        self.counts: dict[str, int] = {}
-
-    def seg(self, name: str):
-        @contextmanager
-        def _timed():
-            t0 = time.perf_counter()
-            try:
-                yield
-            finally:
-                self.times[name] = self.times.get(name, 0.0) + (
-                    time.perf_counter() - t0
-                )
-                self.counts[name] = self.counts.get(name, 0) + 1
-
-        return _timed()
-
-    def report(self) -> list[tuple[str, float, int]]:
-        """(segment, total_s, n_calls) sorted by total descending."""
-        return sorted(
-            ((n, round(t, 3), self.counts[n]) for n, t in self.times.items()),
-            key=lambda r: r[1],
-            reverse=True,
-        )
-
-
-def _seg(timer: "StageTimer | None", name: str):
-    from contextlib import nullcontext
-
-    return timer.seg(name) if timer is not None else nullcontext()
-
-
-def _run_index_writes(writes, timer: "StageTimer | None") -> None:
-    """Execute the per-batch index writes — independent idempotent
-    overwrites of distinct dirs (see the call site in process()) —
-    OVERLAPPED on a driver thread pool, so their fixed per-action costs
-    (job submission, planning, output commit) and straggler tails
-    back-fill each other instead of serializing (round-20 optimization
-    pass; the guide's overlap-independent-jobs shape).  SEQUENTIAL when
-    a StageTimer is attached: overlapping segments would double-count
-    wall time and break the profile's per-adder attribution — the timer
-    is opt-in diagnostics, so it keeps the attributable shape.  Any
-    write's exception propagates (fails the batch for the replay,
-    exactly like the sequential form); the pool context join bounds
-    stragglers."""
-    if timer is not None or len(writes) <= 1:
-        for name, fn in writes:
-            with _seg(timer, name):
-                fn()
-        return
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=len(writes)) as pool:
-        futures = [pool.submit(fn) for _, fn in writes]
-        for fut in futures:
-            fut.result()
+from real_time_financial_market_data_pipeline_spark.streaming.sinks import overlap
 
 
 def _contains_map(dtype) -> bool:
@@ -315,11 +239,6 @@ class IncrementalDedupJob:
     # untouched (pre-round-20 behavior).
     shuffle_partitions: int | None = 8
     trigger: dict = field(default_factory=lambda: {"availableNow": True})
-    # opt-in per-batch stage profiling (round-15 VERDICT task 4): a
-    # StageTimer accumulating wall time per action-bounded segment of
-    # process().  None (default) = zero overhead.  Profiling only —
-    # never attach in production jobs.
-    stage_timer: "StageTimer | None" = None
 
     def checkpoints(self) -> str:
         return os.path.join(self.out_dir, "_checkpoints")
@@ -365,19 +284,20 @@ class IncrementalDedupJob:
                 spark, path, key_cols, only_below=bound, resolve=resolve
             )
 
-        # the five tables' folds are independent staged-publish
+        # the four tables' folds are independent staged-publish
         # protocols confined to their own directories (compact_
-        # latest_state touches only `path`); overlap them on a thread
-        # pool so each fold's fixed costs (listing, job submission,
-        # snapshot write, rename protocol) back-fill each other
-        # (round-20 optimization pass).  _postings_resolve's applied-
-        # mark stash is written by exactly one fold (the postings
-        # table's), so the single-writer contract holds under the pool.
-        from concurrent.futures import ThreadPoolExecutor
-
-        specs = self._fold_specs()
-        with ThreadPoolExecutor(max_workers=len(specs)) as pool:
-            folded = sum(pool.map(_fold_one, specs))
+        # latest_state touches only `path`); overlap them so each
+        # fold's fixed costs (listing, job submission, snapshot write,
+        # rename protocol) back-fill each other (round-20 optimization
+        # pass).  _postings_resolve's applied-mark stash is written by
+        # exactly one fold (the postings table's), so the single-writer
+        # contract holds under the pool.
+        folded = sum(
+            overlap(
+                spark,
+                [lambda spec=spec: _fold_one(spec) for spec in self._fold_specs()],
+            )
+        )
         # the postings fold ran its settled anti-join and its publish
         # completed (compact_latest_state returned): mark the recording
         # applied so the next compaction skips the join until a new cut
@@ -399,7 +319,6 @@ class IncrementalDedupJob:
         return [
             (os.path.join(self.out_dir, "corpus"), ["doc_id"], None),
             (os.path.join(self.out_dir, "index_bands"), ["id", "band"], None),
-            (os.path.join(self.out_dir, "index_sigs"), ["id"], None),
             (
                 os.path.join(self.out_dir, "index_spanfps"),
                 ["fp"],
@@ -536,22 +455,25 @@ class IncrementalDedupJob:
         # storage-layout version (round-21 optimization, guide §2.4/§6):
         # layout 2 carries the full signature ON the index_bands rows
         # (non-null only on each doc's band-0 row, so it is stored once
-        # per doc) instead of a separate index_sigs table — one fewer
-        # write action, one fewer directory listing + read construction
-        # per micro-batch, one fewer table to fold at compaction.  The
-        # layout is lifetime-locked per corpus like every schema-shaping
-        # setting, but NOT diff-checked: the job ADAPTS to the stored
-        # layout (corpora built before the field existed keep layout 1 —
-        # the separate index_sigs table — on both write and read paths),
-        # so existing corpora need no migration and never error.
-        self._sigs_in_bands = True
+        # per doc).  It is the only layout this build reads or writes:
+        # a corpus recorded with any other layout (or none — built
+        # before the field existed, with a separate signature table)
+        # is refused here instead of failing mid-batch on the missing
+        # `sig` column.
         marker = os.path.join(self.out_dir, _CORPUS_SPEC_MARKER)
         if os.path.exists(marker):
             import json
 
             with open(marker) as fh:
                 prior = json.load(fh)
-            self._sigs_in_bands = prior.get("sigs_layout", 1) >= 2
+            if prior.get("sigs_layout") != _SIGS_LAYOUT:
+                raise ValueError(
+                    f"the corpus at {self.out_dir} records sigs_layout "
+                    f"{prior.get('sigs_layout')!r}, but this build reads "
+                    f"and writes only layout {_SIGS_LAYOUT} (signatures on "
+                    "the index_bands band-0 rows) — rebuild the corpus in "
+                    "a fresh out_dir"
+                )
             if self.near_dup and prior.get("minhash_version", 1) != _MINHASH_VERSION:
                 raise ValueError(
                     f"the corpus at {self.out_dir} stores minhash "
@@ -601,7 +523,7 @@ class IncrementalDedupJob:
                         **spec,
                         "decontam_mode": self.decontam_mode,
                         "decontam_k": self.decontam_k,
-                        "sigs_layout": 2,
+                        "sigs_layout": _SIGS_LAYOUT,
                     },
                     fh,
                 )
@@ -690,10 +612,9 @@ class IncrementalDedupJob:
             mono_max = None
             if self.monotone_ids:
                 wm = _read_monotone_watermark(self.out_dir)
-                with _seg(self.stage_timer, "monotone_check"):
-                    row = batch_df.agg(
-                        F.min("doc_id").alias("mn"), F.max("doc_id").alias("mx")
-                    ).first()
+                row = batch_df.agg(
+                    F.min("doc_id").alias("mn"), F.max("doc_id").alias("mx")
+                ).first()
                 mono_max = row["mx"]
                 if wm is not None and batch_id > wm["batch_id"] and row["mn"] <= wm["max_id"]:
                     raise ValueError(
@@ -790,8 +711,7 @@ class IncrementalDedupJob:
 
                     # executes everything upstream: input collapse,
                     # within-doc repair, the decontam excision join
-                    with _seg(self.stage_timer, "repair_decontam_checkpoint"):
-                        batch_df = batch_df.localCheckpoint(eager=True)
+                    batch_df = batch_df.localCheckpoint(eager=True)
                     spliced = (
                         span_fingerprints(
                             batch_df.filter(
@@ -853,15 +773,14 @@ class IncrementalDedupJob:
                 )
 
             if self.near_dup:
-                with _seg(self.stage_timer, "minhash_signatures"):
-                    bands_df = banded_signatures(
-                        batch,
-                        id_col="doc_id",
-                        text_col="text",
-                        num_hashes=self.num_hashes,
-                        bands=self.bands,
-                        shingle_n=self.shingle_n,
-                    ).localCheckpoint(eager=True)  # reused by 3 joins below
+                bands_df = banded_signatures(
+                    batch,
+                    id_col="doc_id",
+                    text_col="text",
+                    num_hashes=self.num_hashes,
+                    bands=self.bands,
+                    shingle_n=self.shingle_n,
+                ).localCheckpoint(eager=True)  # reused by 3 joins below
 
                 est = signature_jaccard(F.col("l.sig"), F.col("r.sig"))
 
@@ -882,22 +801,15 @@ class IncrementalDedupJob:
 
                 # 4. cross-corpus near-dup against the persistent index
                 prior_bands = self._read_prior(spark, "index_bands", batch_id)
-                if self._sigs_in_bands:
-                    # sigs_layout 2: the signature rides the band-0 rows
-                    # of the bands table — deriving the sigs view from
+                if prior_bands is not None:
+                    # the signature rides the band-0 rows of the bands
+                    # table (sigs_layout 2) — deriving the sigs view from
                     # the SAME read skips a directory listing + read
                     # construction per batch (the filter prunes to the
                     # one non-null sig row per doc at the parquet scan)
-                    prior_sigs = (
-                        prior_bands.filter(F.col("sig").isNotNull()).select(
-                            "id", "sig"
-                        )
-                        if prior_bands is not None
-                        else None
+                    prior_sigs = prior_bands.filter(F.col("sig").isNotNull()).select(
+                        "id", "sig"
                     )
-                else:
-                    prior_sigs = self._read_prior(spark, "index_sigs", batch_id)
-                if prior_bands is not None and prior_sigs is not None:
                     cand = (
                         bands_df.select("id", "band", "bhash")
                         .alias("l")
@@ -945,23 +857,22 @@ class IncrementalDedupJob:
             # executes the fingerprint + exact-dedup window, the
             # cross-corpus anti-join, splice-verify, and both near-dup
             # anti-joins (all lazy until this write)
-            with _seg(self.stage_timer, "dedup_joins_corpus_write"):
-                batch.write.mode("overwrite").parquet(corpus_dir)
+            batch.write.mode("overwrite").parquet(corpus_dir)
             kept = spark.read.parquet(corpus_dir)
             # The index writes below are INDEPENDENT actions over
             # already-materialized inputs (`kept` re-read from the
             # just-written corpus dir, `bands_df` localCheckpointed):
             # distinct output dirs, no cross-reads.  They are collected
-            # as (segment, thunk) pairs and OVERLAPPED on a small driver
-            # thread pool (round-20 optimization pass, guide §2.6 —
-            # Spark's scheduler runs concurrent jobs fine; each action's
-            # fixed job-submission/planning cost and straggler tail
-            # back-fill each other instead of serializing).  Crash
-            # contract unchanged: every write is an idempotent
-            # batch_id=N overwrite and the checkpoint commit lands only
-            # after process() returns, so a crash mid-pool leaves only
-            # partial dirs a replay overwrites — same as sequential.
-            index_writes: list[tuple[str, object]] = []
+            # as thunks and OVERLAPPED (sinks.overlap; round-20
+            # optimization pass, guide §2.6 — Spark's scheduler runs
+            # concurrent jobs fine; each action's fixed job-submission/
+            # planning cost and straggler tail back-fill each other
+            # instead of serializing).  Crash contract unchanged: every
+            # write is an idempotent batch_id=N overwrite and the
+            # checkpoint commit lands only after process() returns, so
+            # a crash mid-pool leaves only partial dirs a replay
+            # overwrites — same as sequential.
+            index_writes: list = []
             if self.span_index:
                 from real_time_financial_market_data_pipeline_spark.operators.dedup import span_fingerprints
 
@@ -988,19 +899,17 @@ class IncrementalDedupJob:
                     )
                 )
                 span_dir = os.path.join(self.out_dir, "index_spanfps")
-                index_writes.append((
-                    "spanfp_partial_write",
+                index_writes.append(
                     lambda: partial.write.mode("overwrite").parquet(
                         os.path.join(span_dir, f"batch_id={batch_id}")
-                    ),
-                ))
+                    )
+                )
                 if self.span_postings:
                     # the inverted fp -> doc map the incremental
                     # finalize joins changed spans against (see the
                     # field comment); same idempotent per-batch
                     # overwrite as every other index table
-                    index_writes.append((
-                        "spanpostings_write",
+                    index_writes.append(
                         lambda: kept_fps.select(
                             "fp", F.col("id").alias("doc_id")
                         ).distinct().write.mode("overwrite").parquet(
@@ -1009,55 +918,30 @@ class IncrementalDedupJob:
                                 "index_spanpostings",
                                 f"batch_id={batch_id}",
                             )
-                        ),
-                    ))
+                        )
+                    )
             if self.near_dup:
                 kept_ids = kept.select(F.col("doc_id").alias("id"))
                 kept_bands = bands_df.join(kept_ids, "id", "leftsemi")
-                if self._sigs_in_bands:
-                    # sigs_layout 2 (round-21): ONE write carries bands
-                    # and signatures; sig is masked to the band-0 row so
-                    # each doc's signature is stored exactly once (same
-                    # bytes as the legacy separate table, one fewer
-                    # action + one fewer dropDuplicates shuffle per
-                    # batch; banded_signatures emits every band index
-                    # for every indexable doc, so band 0 is total)
-                    index_writes.append((
-                        "bands_sigs_write",
-                        lambda: kept_bands.select(
-                            "id",
-                            "band",
-                            "bhash",
-                            F.when(F.col("band") == 0, F.col("sig")).alias(
-                                "sig"
-                            ),
-                        ).write.mode("overwrite").parquet(
-                            os.path.join(
-                                self.out_dir, "index_bands", f"batch_id={batch_id}"
-                            )
-                        ),
-                    ))
-                else:
-                    index_writes.append((
-                        "bands_sigs_write",
-                        lambda: kept_bands.select("id", "band", "bhash").write.mode(
-                            "overwrite"
-                        ).parquet(
-                            os.path.join(
-                                self.out_dir, "index_bands", f"batch_id={batch_id}"
-                            )
-                        ),
-                    ))
-                    index_writes.append((
-                        "sigs_write",
-                        lambda: kept_bands.select("id", "sig")
-                        .dropDuplicates(["id"])
-                        .write.mode("overwrite")
-                        .parquet(
-                            os.path.join(self.out_dir, "index_sigs", f"batch_id={batch_id}")
-                        ),
-                    ))
-            _run_index_writes(index_writes, self.stage_timer)
+                # sigs_layout 2 (round-21): ONE write carries bands and
+                # signatures; sig is masked to the band-0 row so each
+                # doc's signature is stored exactly once (one fewer
+                # action + one fewer dropDuplicates shuffle per batch
+                # than a separate table; banded_signatures emits every
+                # band index for every indexable doc, so band 0 is total)
+                index_writes.append(
+                    lambda: kept_bands.select(
+                        "id",
+                        "band",
+                        "bhash",
+                        F.when(F.col("band") == 0, F.col("sig")).alias("sig"),
+                    ).write.mode("overwrite").parquet(
+                        os.path.join(
+                            self.out_dir, "index_bands", f"batch_id={batch_id}"
+                        )
+                    )
+                )
+            overlap(spark, index_writes)
             if self.span_index:
                 # record the window size the index was built with —
                 # underscore-prefixed like _bucket_spec.json, invisible
@@ -1089,8 +973,7 @@ class IncrementalDedupJob:
             # post-crash replay of this batch overwrites only its own
             # delta, never a folded snapshot.
             if self.compact_every and (batch_id + 1) % self.compact_every == 0:
-                with _seg(self.stage_timer, "inline_compact"):
-                    self.compact(spark)
+                self.compact(spark)
 
         try:
             return (
@@ -1135,9 +1018,12 @@ _SPAN_SPEC_MARKER = "_span_spec.json"
 _CORPUS_SPEC_MARKER = "_corpus_spec.json"
 # Bumped when the minhash signature scheme changes incompatibly (v1 =
 # the degenerate monotone-affine scheme, v2 = the round-10 universal
-# hash over 2^31-1): stored index_sigs/index_bands from another version
+# hash over 2^31-1): stored index_bands signatures from another version
 # never match current signatures, so _validate_config refuses to mix.
 _MINHASH_VERSION = 2
+# On-disk index layout recorded in _corpus_spec.json (see
+# _validate_config): 2 = signatures on the index_bands band-0 rows.
+_SIGS_LAYOUT = 2
 
 
 def stored_benchmark_k(fp_dir: str) -> int | None:

@@ -32,6 +32,7 @@ from real_time_financial_market_data_pipeline_spark.pipeline.validate import (
 from real_time_financial_market_data_pipeline_spark.streaming.sinks import (
     SinkManager,
     _manifest_add,
+    overlap,
     parquet_file_sink,
     parquet_sink,
     read_update_sink,
@@ -135,10 +136,9 @@ class MedallionStreamJob:
         # protocols confined to their own directories — overlap them
         # (round-20 optimization pass, same shape as
         # IncrementalDedupJob.compact)
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            return sum(pool.map(_fold_layer, ("gold_5m", "gold_1h")))
+        return sum(
+            overlap(spark, [lambda: _fold_layer("gold_5m"), lambda: _fold_layer("gold_1h")])
+        )
 
     def publish_gold_bucketed(
         self, spark, layer: str = "gold_5m", table: str | None = None, n_buckets: int = 8
@@ -616,14 +616,14 @@ class QuoteEnrichJob:
                 # writes — without the persist, each action re-executes
                 # the stateful join plan.  count() (not isEmpty) so the
                 # materialization is provably COMPLETE before the pool:
-                # the round-21 probe (scripts/probe_quote_batch.py)
-                # measured the join materialization at 71% of batch time
-                # with the writes reading the populated cache, so the
-                # two layer writes are independent cache readers over
-                # distinct dirs and overlap on a small driver pool
-                # (guide §2.6, the same shape as the incremental job's
-                # pooled index writes).  Crash contract unchanged: both
-                # writes are idempotent batch_id=N overwrites, the
+                # the round-21 probe measured the join materialization
+                # at 71% of batch time with the writes reading the
+                # populated cache, so the two layer writes are
+                # independent cache readers over distinct dirs and
+                # overlap (sinks.overlap, the same shape as the
+                # incremental job's pooled index writes).  Crash
+                # contract unchanged: both writes are idempotent
+                # batch_id=N overwrites, the
                 # manifest lands only after BOTH succeed, and the
                 # checkpoint commit only after process() returns — a
                 # crash mid-pool leaves partial dirs a replay overwrites.
@@ -642,14 +642,7 @@ class QuoteEnrichJob:
                             "overwrite"
                         ).parquet(os.path.join(best_dir, f"batch_id={batch_id}"))
 
-                    from concurrent.futures import ThreadPoolExecutor
-
-                    with ThreadPoolExecutor(max_workers=2) as pool:
-                        for fut in [
-                            pool.submit(_write_enriched),
-                            pool.submit(_write_best),
-                        ]:
-                            fut.result()
+                    overlap(batch_df.sparkSession, [_write_enriched, _write_best])
                     # same manifest contract as parquet_sink.write_batch
                     # (best_quote_view routes reads through it)
                     _manifest_add(best_dir, f"batch_id={batch_id}")

@@ -25,6 +25,39 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 
+def overlap(spark, actions: list[Callable[[], object]]) -> list:
+    """Run independent driver-side Spark actions (idempotent writes or
+    folds of DISTINCT directories) overlapped, so each action's fixed
+    cost — job submission, planning, output commit — and straggler tail
+    back-fill the others' instead of serializing.  One action runs
+    inline; two or more run on a pool with one thread per action.
+
+    Every pooled action inherits the caller's Spark local properties
+    (job group, scheduler pool, SQL execution id): inside foreachBatch
+    the caller's job group is the query's runId, so `query.stop()`
+    cancels in-flight pooled writes and the jobs are attributed to the
+    query.  A plain pool thread would start from a fresh JVM thread
+    with none of them.
+
+    Returns the results in `actions` order.  The first failing action's
+    exception (in that order) is re-raised only after every thread has
+    joined, so no write is still running when the caller's error path
+    (e.g. a batch replay) starts."""
+    if len(actions) <= 1:
+        return [action() for action in actions]
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    with ThreadPoolExecutor(max_workers=len(actions)) as pool:
+        # one wrap per action: each wrap clones the caller's local
+        # properties, so the threads never share one mutable copy
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(action)) for action in actions
+        ]
+    return [fut.result() for fut in futures]
+
+
 def parquet_sink(
     df: DataFrame,
     path: str,

@@ -1,11 +1,24 @@
-"""Regenerate PLANS.md: formatted physical plans of the headline
-queries with the scale-relevant properties called out.
+"""Dump formatted physical plans.
 
-    python scripts/dump_plans.py [sf_dir]
+    python scripts/dump_plans.py [--sf DIR]
+    python scripts/dump_plans.py --round N --tag before|after [--sf DIR] [query ...]
+
+Without --round: regenerate PLANS.md — the headline queries' plans with
+the scale-relevant properties called out, plus the plan-budget
+dashboard (default sf0.001).
+
+With --round N: optimization-round evidence — one
+`.explain("formatted")` file per query per tag under plans/rN/, so
+before/after plan diffs are committed artifacts, readable
+without running Spark (default sf0.1; with no query names, every
+declared query is dumped).  Plans are rendered with
+maxMetadataStringLength raised so ReadSchema / PushedFilters are
+untruncated.
 """
 
 from __future__ import annotations
 
+import argparse
 import sys
 from pathlib import Path
 
@@ -169,16 +182,38 @@ def budget_dashboard(spark, sf_dir: str) -> list[str]:
     return out
 
 
-def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    spark = get_spark(app_name="dump_plans")
+def dump_round(spark, sf_dir: str, round_no: int, tag: str, names: list[str]) -> None:
+    """One plan file per query: plans/r<round_no>/<query>_<tag>.txt."""
+    out_dir = REPO_ROOT / "plans" / f"r{round_no}"
+    out_dir.mkdir(parents=True, exist_ok=True)
+    spark.conf.set("spark.sql.maxMetadataStringLength", "100000")
+    failed: list[str] = []
+    for name in names or list(QUERIES):
+        try:
+            plan = physical_plan(QUERIES[name](spark, sf_dir))
+        except Exception as exc:  # noqa: BLE001 — keep dumping the rest
+            failed.append(f"{name}: {type(exc).__name__}: {exc}")
+            continue
+        path = out_dir / f"{name}_{tag}.txt"
+        path.write_text(
+            f"# query: {name}\n# tag: {tag}\n# sf_dir: {sf_dir}\n\n{plan}"
+        )
+        print(f"wrote {path.relative_to(REPO_ROOT)}")
+    if failed:
+        print("FAILED:\n" + "\n".join(failed), file=sys.stderr)
+        sys.exit(1)
+
+
+def dump_plans_md(spark, sf_dir: str) -> None:
     out = [
         "# PLANS — headline physical plans",
         "",
         "Generated by `python scripts/dump_plans.py` (sf: "
         + sf_dir.rsplit("sf", 1)[-1]
-        + "). What to look for in each: pushed filters, pruned ReadSchema,",
-        "broadcast vs shuffle joins, shuffle count, WholeStageCodegen spans.",
+        + "; `--sf DIR` for another scale; `--round N --tag before|after [query ...]`",
+        "writes per-query plan files to plans/rN/ instead). What to look for in each:",
+        "pushed filters, pruned ReadSchema, broadcast vs shuffle joins, shuffle count,",
+        "WholeStageCodegen spans.",
         "",
     ]
     out += budget_dashboard(spark, sf_dir)
@@ -195,6 +230,25 @@ def main() -> None:
     with open(REPO_ROOT / "PLANS.md", "w") as f:
         f.write("\n".join(out))
     print(f"wrote {REPO_ROOT / 'PLANS.md'}")
+
+
+def main() -> None:
+    from tests.conftest import SF_DIR
+
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--sf", help="scale-factor dir (default sf0.001, sf0.1 with --round)")
+    ap.add_argument("--round", type=int, help="dump per-query plans into plans/r<N>/")
+    ap.add_argument("--tag", choices=("before", "after"), default="before")
+    ap.add_argument("queries", nargs="*", help="with --round: queries to dump (default all)")
+    args = ap.parse_args()
+    if args.queries and args.round is None:
+        ap.error("query names need --round")
+    spark = get_spark(app_name="dump_plans")
+    if args.round is None:
+        dump_plans_md(spark, args.sf or SF_DIR)
+    else:
+        sf_dir = args.sf or str(Path(SF_DIR).with_name("sf0.1"))
+        dump_round(spark, sf_dir, args.round, args.tag, args.queries)
     spark.stop()
 
 

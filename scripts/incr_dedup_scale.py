@@ -177,7 +177,7 @@ def listing_probe(base: str, out_json: str | None) -> None:
                         if re.fullmatch(r"batch_id=\d+", d)
                     ]
                 )
-                for t in ("corpus", "index_bands", "index_sigs")
+                for t in ("corpus", "index_bands")
             }
             res = {
                 "tag": tag,
@@ -261,7 +261,6 @@ def main() -> None:
                     "batches": len(leg_durs),
                     "folded_dirs": folded,
                     "index_bands_mb": round(dir_bytes(os.path.join(out, "index_bands")) / 1e6, 2),
-                    "index_sigs_mb": round(dir_bytes(os.path.join(out, "index_sigs")) / 1e6, 2),
                     "corpus_mb": round(dir_bytes(os.path.join(out, "corpus")) / 1e6, 2),
                     "corpus_docs": corpus_view(spark, out).count(),
                 }

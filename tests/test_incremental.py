@@ -966,118 +966,98 @@ def test_map_typed_passthrough_column_survives_batch_dedup(spark, tmp_path):
     assert rows[2]["meta"] == {"src": "a"}  # '{"src":"a"}' < '{"src":"b"}'
 
 
-def test_stage_timer_accumulates_and_is_detachable():
-    """StageTimer (round-15 profiling hook; imports hoisted r16): seg()
-    accumulates wall time and counts per segment name across uses, and
-    the exception path still records the segment (finally-block)."""
-    from real_time_financial_market_data_pipeline_spark.streaming.incremental import StageTimer
+def test_overlap_executes_all_and_propagates(spark):
+    """sinks.overlap (the one mechanism behind every overlapped write):
+    every action runs exactly once and results come back in argument
+    order; a failing action's exception propagates only after its
+    pooled siblings have finished; a single action runs inline on the
+    caller's thread."""
+    import threading
 
-    t = StageTimer()
-    with t.seg("a"):
-        pass
-    with t.seg("a"):
-        pass
-    with t.seg("b"):
-        pass
-    assert t.counts == {"a": 2, "b": 1}
-    assert t.times["a"] >= 0 and t.times["b"] >= 0
-    try:
-        with t.seg("boom"):
-            raise ValueError("x")
-    except ValueError:
-        pass
-    assert t.counts["boom"] == 1
+    import pytest
 
+    from real_time_financial_market_data_pipeline_spark.streaming.sinks import overlap
 
-def test_run_index_writes_executes_all_and_propagates():
-    """_run_index_writes (round-20 overlap of the per-batch index
-    writes): every thunk executes exactly once whether the pooled or
-    the sequential (timer-attached / single-write) path is taken; a
-    failing write's exception propagates to the caller (failing the
-    batch for the replay, exactly like the sequential form) while the
-    pool still joins its other threads; and the timer path records one
-    segment per write name."""
-    from real_time_financial_market_data_pipeline_spark.streaming.incremental import (
-        StageTimer,
-        _run_index_writes,
-    )
-
-    # pooled path (no timer, >1 write): all run, any order
+    # pooled path: all run once, results in argument order
     ran: list[str] = []
-    _run_index_writes(
-        [("w1", lambda: ran.append("w1")), ("w2", lambda: ran.append("w2"))],
-        None,
-    )
+
+    def _act(name: str, delay: float):
+        def run() -> str:
+            time.sleep(delay)
+            ran.append(name)
+            return name
+
+        return run
+
+    assert overlap(spark, [_act("w1", 0.2), _act("w2", 0.0)]) == ["w1", "w2"]
     assert sorted(ran) == ["w1", "w2"]
 
-    # exception propagates from the pooled path; the sibling write
-    # still ran (pool joins before the error surfaces)
+    # the failure surfaces only after the slower sibling finished
     ran.clear()
 
     def _boom() -> None:
         raise RuntimeError("write failed")
 
-    try:
-        _run_index_writes(
-            [("ok", lambda: ran.append("ok")), ("bad", _boom)], None
-        )
-    except RuntimeError as exc:
-        assert "write failed" in str(exc)
-    else:  # pragma: no cover
-        raise AssertionError("pooled write failure did not propagate")
-    assert ran == ["ok"]
+    with pytest.raises(RuntimeError, match="write failed"):
+        overlap(spark, [_boom, _act("slow", 0.5)])
+    assert ran == ["slow"]
 
-    # timer attached -> sequential, one attributed segment per name
-    t = StageTimer()
-    ran.clear()
-    _run_index_writes(
-        [("s1", lambda: ran.append("s1")), ("s2", lambda: ran.append("s2"))],
-        t,
-    )
-    assert ran == ["s1", "s2"]  # declared order preserved sequentially
-    assert t.counts == {"s1": 1, "s2": 1}
-
-    # single write skips the pool regardless of timer
-    ran.clear()
-    _run_index_writes([("only", lambda: ran.append("only"))], None)
-    assert ran == ["only"]
+    # a single action skips the pool
+    threads: list[threading.Thread] = []
+    assert overlap(spark, [lambda: threads.append(threading.current_thread()) or 7]) == [7]
+    assert threads == [threading.current_thread()]
+    assert overlap(spark, []) == []
 
 
-def test_legacy_sigs_layout_corpus_keeps_separate_table(spark, tmp_path):
-    """Corpora built before sigs_layout existed (spec file WITHOUT the
-    field) keep the separate index_sigs table on BOTH the write and the
-    read path for their whole lifetime — no data migration — and
-    cross-corpus near-dup still catches against that legacy index.  The
-    same feed drained into a fresh (layout 2) corpus must keep exactly
-    the same docs via the derived sigs path."""
-    feed = str(tmp_path / "feed")
-    out_new = str(tmp_path / "out_new")
-    out_legacy = str(tmp_path / "out_legacy")
+def test_pooled_index_writes_keep_query_job_group(spark, tmp_path):
+    """Every Spark job a foreachBatch drain starts — including the
+    index writes overlap() runs on pool threads — carries the query's
+    runId job group, so query.stop() cancels in-flight pooled writes
+    and per-query job accounting sees them.  Near-dup + span index
+    means at least two writes are pooled per batch."""
+    from real_time_financial_market_data_pipeline_spark.sources.streaming import read_doc_stream
+
+    feed, out = str(tmp_path / "feed"), str(tmp_path / "out")
     _write_doc_feed(
         feed,
         [
             [{"doc_id": 1, "text": LONG_A}, {"doc_id": 2, "text": LONG_B}],
-            # doc 3 is a cross-batch NEAR dup of doc 1: catching it
-            # exercises the prior_bands + prior_sigs read path
             [{"doc_id": 3, "text": LONG_A2}, {"doc_id": 4, "text": "another tiny note"}],
         ],
     )
-    # fresh corpus: layout 2 — derived sigs path catches the near dup
-    _drain(spark, feed, out_new)
-    assert sorted(r["doc_id"] for r in corpus_view(spark, out_new).collect()) == [1, 2, 4]
-    spec = json.load(open(os.path.join(out_new, "_corpus_spec.json")))
-    assert spec.pop("sigs_layout") == 2
+    tracker = spark.sparkContext.statusTracker()
+    docs = read_doc_stream(spark, feed, max_files_per_trigger=1).select("doc_id", "text")
+    job = IncrementalDedupJob(out_dir=out, span_index=True)
+    ungrouped_before = set(tracker.getJobIdsForGroup(None))
+    q = job.start(docs)
+    assert q.awaitTermination(180)
+    ungrouped = set(tracker.getJobIdsForGroup(None)) - ungrouped_before
+    assert sorted(r["doc_id"] for r in corpus_view(spark, out).collect()) == [1, 2, 4]
+    assert tracker.getJobIdsForGroup(str(q.runId))
+    assert not ungrouped, f"jobs outside the query's job group: {sorted(ungrouped)}"
 
-    # legacy corpus: pre-create the spec file WITHOUT sigs_layout (what a
-    # pre-round-21 build wrote); the job must adapt to layout 1 from the
-    # first batch — no schema-heterogeneous bands dirs, no error
-    os.makedirs(out_legacy)
-    with open(os.path.join(out_legacy, "_corpus_spec.json"), "w") as fh:
-        json.dump(spec, fh)
-    _drain(spark, feed, out_legacy)
-    assert sorted(r["doc_id"] for r in corpus_view(spark, out_legacy).collect()) == [1, 2, 4]
-    bands = spark.read.parquet(os.path.join(out_legacy, "index_bands"))
-    assert "sig" not in bands.columns
-    sigs = spark.read.parquet(os.path.join(out_legacy, "index_sigs"))
-    assert sigs.groupBy("id").count().filter(F.col("count") > 1).count() == 0
-    assert set(r["id"] for r in sigs.select("id").collect()) == {1, 2, 4}
+
+def test_corpus_with_other_sigs_layout_is_refused(spark, tmp_path):
+    """sigs_layout 2 (signatures on the index_bands band-0 rows) is the
+    only on-disk index layout: a corpus whose _corpus_spec.json records
+    another layout — or none, i.e. built before the field existed with
+    a separate signature table — is refused at start() with a
+    ValueError naming the layout, instead of failing mid-batch on the
+    missing `sig` column."""
+    import pytest
+
+    from real_time_financial_market_data_pipeline_spark.sources.streaming import read_doc_stream
+
+    feed, out = str(tmp_path / "feed"), str(tmp_path / "out")
+    _write_doc_feed(feed, [[{"doc_id": 1, "text": LONG_A}]])
+    _drain(spark, feed, out)
+    marker = os.path.join(out, "_corpus_spec.json")
+    spec = json.load(open(marker))
+    assert spec["sigs_layout"] == 2
+
+    docs = read_doc_stream(spark, feed).select("doc_id", "text")
+    for stored in ({**spec, "sigs_layout": 1}, {k: v for k, v in spec.items() if k != "sigs_layout"}):
+        with open(marker, "w") as fh:
+            json.dump(stored, fh)
+        with pytest.raises(ValueError, match="sigs_layout"):
+            IncrementalDedupJob(out_dir=out).start(docs)
