@@ -290,9 +290,11 @@ def build_final_line(
 
     Under budget pressure (more entries in future rounds), optional
     scalars are dropped first (in _FINAL_OPTIONAL_KEYS order), then
-    query timings are re-rounded to 2 decimals; `queries`, `sf` and the
-    metric/value/unit trio are never dropped.  The full-precision
-    payload is always available in BENCH_local_r*.json."""
+    query timings are re-rounded to 2 decimals, then trailing `queries`
+    entries are dropped into an `_elided` count until the line fits;
+    `queries`, `sf` and the metric/value/unit trio are never dropped.
+    The full-precision payload is always available in
+    BENCH_local_r*.json."""
     line_obj = {
         "metric": "headline_queries_total",
         "value": digest.get("total"),
@@ -314,10 +316,14 @@ def build_final_line(
             del line_obj[k]
             line = dump(line_obj)
     if len(line) > budget:
-        line_obj["queries"] = {
-            n: round(t, 2) for n, t in timings.items()
-        }
+        rounded = [(n, round(t, 2)) for n, t in timings.items()]
+        line_obj["queries"] = dict(rounded)
         line = dump(line_obj)
+        while len(line) > budget and rounded:
+            rounded.pop()
+            line_obj["queries"] = dict(rounded)
+            line_obj["_elided"] = len(timings) - len(rounded)
+            line = dump(line_obj)
     return line
 
 

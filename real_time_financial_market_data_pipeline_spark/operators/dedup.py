@@ -112,7 +112,7 @@ def minhash_signature(hash_col: Column, num_hashes: int = 16) -> Column:
     their exact-Jaccard candidate verification; only recall shape was
     affected there.  Stored signatures/band keys from the degenerate
     scheme are incompatible — `IncrementalDedupJob` version-locks via
-    _corpus_spec.json (minhash_version)."""
+    _corpus_spec.json (format_version)."""
     import random
 
     rng = random.Random(0xD1CE)

@@ -34,9 +34,10 @@ composition bugs live):
      (`split_excise_common_spans`): chunks are verbatim substrings of
      the indexed text, so no k-gram — benchmark or boilerplate — can
      form that was not already present and verified clean.  The spans
-     come from `common_spans_view` (the incremental index), which
-     validates span_k against the on-disk `_span_spec.json` marker —
-     a window-size mismatch raises instead of slicing wrong text.
+     come from the incremental index, and finalize validates span_k
+     against the corpus spec (`_corpus_spec.json`, which also carries
+     the corpus format version) — a window-size or format mismatch
+     raises instead of slicing wrong text.
   4. The quality/repetition gate and PII redaction run on the FINAL
      chunk text (what a training job reads); the split is hashed on
      doc_id so all chunks of a document land in the same split (no
@@ -80,7 +81,9 @@ from real_time_financial_market_data_pipeline_spark.functions.text import (
 from real_time_financial_market_data_pipeline_spark.operators.sampling import train_val_test_split
 from real_time_financial_market_data_pipeline_spark.streaming.incremental import (
     IncrementalDedupJob,
+    _dump_json_atomic,
     corpus_view,
+    record_settled_fps,
     span_postings_pruned as _postings_pruned_here,
     span_postings_view,
     span_stats_view,
@@ -144,36 +147,15 @@ class CuratedCorpusPipeline:
     # Opt-in monotone doc_id ingest contract (round-12 VERDICT task 4):
     # enforced per batch by the job; licenses finalize() to PRUNE the
     # span-postings inverted index down to the not-yet-settled
-    # fingerprints after each cut (see prune_span_postings for the
-    # soundness argument).  Off = postings behavior exactly as before.
+    # fingerprints after each cut.  The prune rides the postings
+    # table's own compaction: finalize records the settled fp set
+    # (incremental.record_settled_fps) and the next compaction — which
+    # rewrites every folded dir anyway — drops those rows inside its
+    # resolve, so settled rows linger at most one compaction cadence
+    # (cheaper than a per-cut rewrite, measured in SCALE.md).  Requires
+    # compact_every (otherwise rows would never be removed).  Off =
+    # postings behavior exactly as before.
     monotone_ids: bool = False
-    # Per-dir rewrite threshold for the postings prune: skip a rewrite
-    # when the removable fraction is below this (skipping is sound —
-    # see prune_span_postings).  Raise on skew-light corpora where the
-    # rewrite wouldn't pay for itself.
-    prune_min_removed_frac: float = 0.0
-    # FUSED pruning (round-13 VERDICT task 4): instead of finalize
-    # paying a separate per-dir count+rewrite pass, record the settled
-    # fp set (incremental.record_settled_fps) and let the postings
-    # table's own compaction — which rewrites every folded dir anyway —
-    # drop those rows inside its resolve.  Near-zero per-cut prune cost
-    # when compaction cadence ≈ cut cadence; the trade is space-reclaim
-    # LATENCY (settled rows linger until the next compaction, bounded
-    # by compact_every).  Requires compact_every (otherwise rows would
-    # never be removed).  Not lifetime-locked: flipping modes between
-    # cuts is sound — both write the may-be-pruned marker before any
-    # removal, and each cut's settled set subsumes the previous one.
-    #
-    # DEFAULT (round-14 VERDICT task 1): None = AUTO — fused whenever
-    # the contract allows it (monotone_ids set and a compact_every
-    # cadence exists), eager otherwise.  The round-13 aging pair
-    # measured fused at −32% Σ finalize over 12 cuts with postings
-    # within one compaction cadence of eager and every certification
-    # 0-diff (SCALE.md), so fused is the right form whenever it is
-    # sound.  Explicit False opts out (always eager); explicit True is
-    # validated at construction (__post_init__) instead of failing
-    # data-dependently at a later cut.
-    prune_fused: bool | None = None
     # Fold curated generations (see finalize) into one when the
     # committed count exceeds this — bounds the per-read supersede
     # join and the directory listing, same motivation as compact_every.
@@ -204,38 +186,14 @@ class CuratedCorpusPipeline:
     shuffle_partitions: int | None = 8
 
     def __post_init__(self) -> None:
-        """Fail-fast config validation (round-14 ADVICE, low): an
-        explicit prune_fused=True whose prerequisites are missing used
-        to surface only inside finalize's monotone/postings/non-empty
-        branch — a misconfigured pipeline could run many cuts (or
-        forever, with monotone_ids=False silently ignoring the flag)
-        before the error fired.  Validate at CONSTRUCTION instead; the
-        auto default (None) never needs validation because it only
-        selects fused when the prerequisites hold."""
-        if self.prune_fused is True:
-            if not self.monotone_ids:
-                raise ValueError(
-                    "prune_fused=True requires monotone_ids=True: the prune "
-                    "(either form) is only sound under the monotone doc_id "
-                    "ingest contract — without it the flag would be silently "
-                    "ignored"
-                )
-            if self.compact_every is None:
-                raise ValueError(
-                    "prune_fused=True requires compact_every: without a "
-                    "compaction cadence the recorded settled rows would "
-                    "never be removed — use prune_fused=False for the eager "
-                    "per-cut prune"
-                )
-
-    @property
-    def _prune_fused_effective(self) -> bool:
-        """Resolved prune form: explicit True/False wins; the None
-        default is AUTO — fused exactly when sound (monotone_ids and a
-        compaction cadence both present)."""
-        if self.prune_fused is not None:
-            return self.prune_fused
-        return self.monotone_ids and self.compact_every is not None
+        """Fail-fast config validation at CONSTRUCTION (round-14
+        ADVICE, low) instead of at a later cut."""
+        if self.monotone_ids and self.compact_every is None:
+            raise ValueError(
+                "monotone_ids=True requires compact_every: the postings "
+                "prune rides the compaction rewrite, so without a "
+                "compaction cadence the settled rows would never be removed"
+            )
 
     def job(self) -> IncrementalDedupJob:
         """The configured ingest job (exposed for compact()/inspection).
@@ -320,11 +278,8 @@ class CuratedCorpusPipeline:
             )
 
     def _write_finalize_spec(self) -> None:
-        import json
-
         os.makedirs(self._state_dir(), exist_ok=True)
-        with open(self._state_dir("_finalize_spec.json"), "w") as fh:
-            json.dump(self._finalize_spec(), fh)
+        _dump_json_atomic(self._state_dir("_finalize_spec.json"), self._finalize_spec())
 
     def refinalize(self, spark, **new_settings) -> str:
         """The operational half of the finalize-spec lock (round-11
@@ -758,13 +713,9 @@ class CuratedCorpusPipeline:
         and the next finalize overwrites."""
         return _committed_generations(self.out_dir)
 
-    def _qualifying_spans(self, spark) -> DataFrame:
-        """The current qualifying span set (fp, rep_id, rep_pos) served
-        off the incremental index.  Excision needs exactly these three
-        columns — deliberately NOT common_spans_view, whose span_text
-        re-extraction joins the full corpus for a column the excision
-        never reads.  The k contract is still validated against the
-        on-disk marker."""
+    def _check_corpus_spec(self) -> None:
+        """Refuse a corpus of another format version (stored_span_k
+        raises) or one whose span index was built with another k."""
         built_k = stored_span_k(self.out_dir)
         if built_k is not None and built_k != self.span_k:
             raise ValueError(
@@ -772,6 +723,15 @@ class CuratedCorpusPipeline:
                 f"{self.out_dir} was built with span_k={built_k} — "
                 "fingerprints of different window sizes don't mix"
             )
+
+    def _qualifying_spans(self, spark) -> DataFrame:
+        """The current qualifying span set (fp, rep_id, rep_pos) served
+        off the incremental index.  Excision needs exactly these three
+        columns — deliberately NOT common_spans_view, whose span_text
+        re-extraction joins the full corpus for a column the excision
+        never reads.  The k and format contracts are still validated
+        against the corpus spec."""
+        self._check_corpus_spec()
         return span_stats_view(
             spark, self.out_dir, min_docs=self.span_min_docs
         ).select("fp", "rep_id", "rep_pos")
@@ -825,10 +785,12 @@ class CuratedCorpusPipeline:
         last COMMITTED snapshot and overwrites the partial.
         When committed generations exceed `curated_max_gens`, they are
         folded into one (same bound-the-listing motivation as
-        compact_every); a legacy flat `curated/` layout from a pre-
-        generational finalize is rewritten on the next full pass."""
+        compact_every)."""
         if mode not in ("auto", "full", "delta"):
             raise ValueError(f"finalize mode must be auto/full/delta (got {mode!r})")
+        # a corpus of another format version is refused before
+        # recover() below touches anything
+        self._check_corpus_spec()
         # staged-compaction crash recovery BEFORE any history read
         # (round-10 ADVICE): if the ingest stream died mid-compaction-
         # publish and finalize runs before the stream restarts, the
@@ -838,12 +800,6 @@ class CuratedCorpusPipeline:
         # Mirrors IncrementalDedupJob.start(); no-op (one listdir per
         # table) when nothing crashed.
         self.job().recover(spark)
-        if self.monotone_ids:
-            from real_time_financial_market_data_pipeline_spark.streaming.incremental import (
-                recover_pruned_postings,
-            )
-
-            recover_pruned_postings(self.out_dir)
         committed = self._committed_gens()
         postings_exist = os.path.isdir(
             os.path.join(self.out_dir, "index_spanpostings")
@@ -856,27 +812,6 @@ class CuratedCorpusPipeline:
                 "run a full finalize first"
             )
         out_path = self.curated_dir()
-        # a pre-generational (flat split=*) layout cannot coexist with
-        # gen=K dirs (partition inference would see conflicting
-        # structures): clear it — the curated table is derived output,
-        # fully regenerated by this very call
-        if os.path.isdir(out_path) and any(
-            d.startswith("split=") for d in os.listdir(out_path)
-        ):
-            import shutil
-
-            shutil.rmtree(out_path)
-            # commit markers and data must reset TOGETHER (round-10
-            # ADVICE): if a pre-generational finalize ever clobbered a
-            # generational curated/ dir, stale finalize_state gens
-            # would outlive the wiped rows — _committed_generations
-            # would report them, and curated_view's latest-generation-
-            # wins join would let empty stale gens supersede the fresh
-            # gen-0 rows, silently dropping docs from the view.
-            for state in ("docs", "spans"):
-                shutil.rmtree(self._state_dir(state), ignore_errors=True)
-            committed = []
-            mode = "full"
 
         # grace sweep (round-12 VERDICT task 5): delete generation dirs
         # — rows, spans state, docs markers — whose gen is no longer
@@ -943,40 +878,12 @@ class CuratedCorpusPipeline:
             self._fold_gens(spark)
         # span-postings pruning (round-12 task 4): with the monotone-id
         # contract, every fp in the JUST-COMMITTED snapshot is settled
-        # forever — drop its posting rows (one anti-join rewrite per
-        # batch dir, stream-stopped); the inverted index keeps only the
-        # not-yet-settled tail instead of full corpus history
+        # forever — record the set; the postings table's next
+        # compaction drops its rows inside the rewrite it performs
+        # anyway, so the inverted index keeps only the not-yet-settled
+        # tail instead of full corpus history
         if self.monotone_ids and postings_exist and not spans_now.isEmpty():
-            if self._prune_fused_effective:
-                # fused form (round-13 task 4, DEFAULT since round 14
-                # when the contract allows): record the settled set;
-                # the postings table's next compaction drops the rows
-                # inside the rewrite it performs anyway
-                if self.compact_every is None:
-                    # unreachable through __post_init__ + the auto
-                    # default; kept as a second gate against post-
-                    # construction attribute mutation
-                    raise ValueError(
-                        "prune_fused requires compact_every: without a "
-                        "compaction cadence the recorded settled rows would "
-                        "never be removed — use prune_fused=False"
-                    )
-                from real_time_financial_market_data_pipeline_spark.streaming.incremental import (
-                    record_settled_fps,
-                )
-
-                record_settled_fps(self.out_dir, spans_now)
-            else:
-                from real_time_financial_market_data_pipeline_spark.streaming.incremental import (
-                    prune_span_postings,
-                )
-
-                prune_span_postings(
-                    spark,
-                    self.out_dir,
-                    spans_now,
-                    min_removed_frac=self.prune_min_removed_frac,
-                )
+            record_settled_fps(self.out_dir, spans_now)
         if self.auto_publish:
             # freshness hook (round-13 VERDICT task 3): the serving
             # table is never stale after a cut.  Runs AFTER the commit
@@ -1218,12 +1125,12 @@ class CuratedCorpusPipeline:
             # bearing minority), materialized once for the semi/anti
             # pair below.  On a PRUNED corpus (monotone_ids pruning ran)
             # this split is only sound for DELTA cuts: a redo doc always
-            # keeps at least one live posting row (new docs post-date
-            # the prune; changed fps never settle), but a FULL cut's
-            # old holders of settled fps are gone from the index — full
-            # cuts there take the full-sweep branch (corpus_sweep stays
-            # the whole corpus), trading refinalize cost for the bounded
-            # index (see prune_span_postings).
+            # keeps at least one live posting row (new docs sit above
+            # the recording's watermark; changed fps never settle), but
+            # a FULL cut's old holders of settled fps are gone from the
+            # index — full cuts there take the full-sweep branch
+            # (corpus_sweep stays the whole corpus), trading refinalize
+            # cost for the bounded index (see record_settled_fps).
             affected = (
                 span_postings_view(spark, self.out_dir)
                 .join(spans.select("fp"), "fp")
@@ -1363,19 +1270,13 @@ def curated_view(spark, out_dir: str) -> DataFrame:
     list while contributing no rows).  Uncommitted generations (crash
     debris) are filtered out by the same marker.  With a single
     committed generation — the common state after a fold or a first
-    full finalize — the supersede join short-circuits away entirely.
-    Pre-generational flat layouts read as-is (back-compat)."""
-    import re
-
+    full finalize — the supersede join short-circuits away entirely."""
     path = os.path.join(out_dir, "curated")
     if not os.path.isdir(path):
         raise FileNotFoundError(
             f"{path} does not exist — run CuratedCorpusPipeline.start() "
             "to drain the ingest stream, then .finalize(spark)"
         )
-    if not any(re.fullmatch(r"gen=\d+", d) for d in os.listdir(path)):
-        return spark.read.parquet(path)  # legacy flat layout
-
     # readers take the manifest — ONE atomic file read, immune to the
     # fold race a marker-directory listing has (round-12 task 5); the
     # grace sweep guarantees everything a current manifest references
@@ -1430,13 +1331,9 @@ def _write_curated_manifest(out_dir: str, gens: list[int]) -> None:
     manifest one generation stale — readers keep seeing the PREVIOUS
     consistent state (never a partial one) until the next finalize
     rewrites it from the markers."""
-    import json
-
-    path = os.path.join(out_dir, "curated", _CURATED_MANIFEST)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump({"gens": sorted(gens)}, fh)
-    os.replace(tmp, path)
+    _dump_json_atomic(
+        os.path.join(out_dir, "curated", _CURATED_MANIFEST), {"gens": sorted(gens)}
+    )
 
 
 def _read_curated_manifest(out_dir: str) -> list[int] | None:

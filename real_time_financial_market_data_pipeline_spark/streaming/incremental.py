@@ -14,9 +14,8 @@ equi-join against:
                  banded_signatures); `sig` is the full signature for
                  index-only Jaccard estimation (no text re-read),
                  non-null ONLY on a doc's band-0 row so it is stored
-                 once per doc (sigs_layout 2, round-21: one write
-                 action + one directory listing/read fewer per batch
-                 than the separate table)
+                 once per doc (one write action + one directory
+                 listing/read fewer per batch than a separate table)
   index_spanfps/ (span_index=True) batch_id=N dirs of per-fingerprint
                  partial span stats — common_spans/excision against the
                  growing corpus without re-fingerprinting history
@@ -49,6 +48,13 @@ Periodically fold the accumulated batch_id dirs with `.compact()` (the
 tables are append-only with unique keys, so per-key-latest folding is
 an exact rewrite) — bounds the directory count readers list, same
 motivation as the gold sink's auto-compaction.
+
+On-disk format: `_corpus_spec.json` records the corpus format version
+and the lifetime-locked settings.  It has one reader and one writer
+(`_read_corpus_spec` / `_write_corpus_spec`); the reader refuses any
+format version but this build's, so every entry point that reads a
+corpus (start, finalize, the span views) fails fast on an old or
+foreign layout instead of misreading it.
 """
 
 from __future__ import annotations
@@ -208,10 +214,10 @@ class IncrementalDedupJob:
     # qualifies, its min-(id, pos) representative can never move again
     # (new docs only have LARGER ids), so the fp can never re-enter a
     # delta finalize's changed set — its posting rows are DEAD for redo
-    # detection and prune_span_postings may delete them.  WITHOUT the
-    # contract that pruning is unsound (a later smaller-id doc moves
-    # the rep and the delta would miss the old holders), so the default
-    # keeps today's behavior exactly.  Lifetime-locked like every
+    # detection and the postings fold may drop them (see
+    # record_settled_fps).  WITHOUT the contract that pruning is unsound
+    # (a later smaller-id doc moves the rep and the delta would miss
+    # the old holders), so the default keeps today's behavior exactly.  Lifetime-locked like every
     # fingerprint-shaping setting.
     monotone_ids: bool = False
     # Optional STATELESS per-batch preparation applied before anything
@@ -273,7 +279,7 @@ class IncrementalDedupJob:
         # applied mark only after the publish completes.  The sibling
         # `_prune_joins_run` int is a test-observability counter of
         # anti-join executions (see _postings_resolve).
-        self._prune_applied_candidate: tuple[int, int | None, int | None] | None = None
+        self._prune_applied_candidate: tuple[int, int, int] | None = None
 
         def _fold_one(spec) -> int:
             path, key_cols, resolve = spec
@@ -344,9 +350,9 @@ class IncrementalDedupJob:
         ~0 on corpora where compaction cadence ≈ cut cadence.  Scoped
         to doc_id <= the recording's watermark: rows of docs ingested
         AFTER the recording cut must stay live for the next delta
-        cut's excision split (see record_settled_fps).  Sound by the
-        same argument as prune_span_postings within that scope;
-        bit-identical to the unfused fold when nothing is pending.
+        cut's excision split (see record_settled_fps, which also holds
+        the soundness argument); bit-identical to the plain fold when
+        nothing is pending.
 
         ALREADY-APPLIED SKIP (round-14 VERDICT task 1): when the
         applied mark matches the pending identity — a previous
@@ -419,7 +425,9 @@ class IncrementalDedupJob:
         index + its k) must not change over a corpus's lifetime — batch
         dirs would go schema-heterogeneous (plain spark.read.parquet
         samples one footer) or the span view would silently miss the
-        batches ingested while the index was off."""
+        batches ingested while the index was off; (c) the stored corpus
+        spec must record this build's format version (_read_corpus_spec
+        raises otherwise)."""
         if self.decontam_mode not in ("drop", "excise"):
             raise ValueError(
                 f"decontam_mode must be 'drop' or 'excise' (got {self.decontam_mode!r})"
@@ -440,7 +448,6 @@ class IncrementalDedupJob:
                     "matching k (or rebuild the index)"
                 )
         spec = {
-            "minhash_version": _MINHASH_VERSION,
             "decontam_col": self.benchmark_fp_dir is not None,
             "span_index": self.span_index,
             "span_k": self.span_k if self.span_index else None,
@@ -452,81 +459,27 @@ class IncrementalDedupJob:
             ),
             "monotone_ids": self.monotone_ids,
         }
-        # storage-layout version (round-21 optimization, guide §2.4/§6):
-        # layout 2 carries the full signature ON the index_bands rows
-        # (non-null only on each doc's band-0 row, so it is stored once
-        # per doc).  It is the only layout this build reads or writes:
-        # a corpus recorded with any other layout (or none — built
-        # before the field existed, with a separate signature table)
-        # is refused here instead of failing mid-batch on the missing
-        # `sig` column.
-        marker = os.path.join(self.out_dir, _CORPUS_SPEC_MARKER)
-        if os.path.exists(marker):
-            import json
-
-            with open(marker) as fh:
-                prior = json.load(fh)
-            if prior.get("sigs_layout") != _SIGS_LAYOUT:
-                raise ValueError(
-                    f"the corpus at {self.out_dir} records sigs_layout "
-                    f"{prior.get('sigs_layout')!r}, but this build reads "
-                    f"and writes only layout {_SIGS_LAYOUT} (signatures on "
-                    "the index_bands band-0 rows) — rebuild the corpus in "
-                    "a fresh out_dir"
-                )
-            if self.near_dup and prior.get("minhash_version", 1) != _MINHASH_VERSION:
-                raise ValueError(
-                    f"the corpus at {self.out_dir} stores minhash "
-                    f"signatures/band keys of scheme version "
-                    f"{prior.get('minhash_version', 1)}, but this build "
-                    f"produces version {_MINHASH_VERSION} (the round-10 "
-                    "universal-hash fix) — mixed-version signatures never "
-                    "estimate correctly, so cross-corpus near-dup would be "
-                    "a silent no-op; rebuild the corpus (or set "
-                    "near_dup=False to keep only exact dedup)"
-                )
-            # fields added in round 10: a spec file WITHOUT the key was
-            # written by a build where the behavior was off — treat
-            # missing as that legacy default instead of skipping the
-            # check, or repair/postings could be switched on mid-life
-            # and history would lack repaired fingerprints/posting rows
-            # with no error (round-10 review)
-            legacy_defaults = {
-                "repair_internal": False,
-                "internal_k": None,
-                "internal_min_occurrences": None,
-                "span_postings": False,
-                # added round 12: corpora built before the flag existed
-                # never enforced (or relied on) monotone ids
-                "monotone_ids": False,
-            }
-            diffs = {
-                key: (prior.get(key, legacy_defaults.get(key)), spec[key])
-                for key in spec
-                if (key in prior or key in legacy_defaults)
-                and prior.get(key, legacy_defaults.get(key)) != spec[key]
-            }
-            if diffs:
-                raise ValueError(
-                    f"IncrementalDedupJob config conflicts with the corpus at "
-                    f"{self.out_dir} (fields are fixed for a corpus's "
-                    f"lifetime; stored vs requested: {diffs}) — reuse the "
-                    "original settings or start a fresh out_dir"
-                )
-        else:
-            import json
-
-            os.makedirs(self.out_dir, exist_ok=True)
-            with open(marker, "w") as fh:
-                json.dump(
-                    {
-                        **spec,
-                        "decontam_mode": self.decontam_mode,
-                        "decontam_k": self.decontam_k,
-                        "sigs_layout": _SIGS_LAYOUT,
-                    },
-                    fh,
-                )
+        prior = _read_corpus_spec(self.out_dir)
+        if prior is None:
+            _write_corpus_spec(
+                self.out_dir,
+                {
+                    **spec,
+                    "decontam_mode": self.decontam_mode,
+                    "decontam_k": self.decontam_k,
+                },
+            )
+            return
+        diffs = {
+            key: (prior[key], spec[key]) for key in spec if prior[key] != spec[key]
+        }
+        if diffs:
+            raise ValueError(
+                f"IncrementalDedupJob config conflicts with the corpus at "
+                f"{self.out_dir} (fields are fixed for a corpus's "
+                f"lifetime; stored vs requested: {diffs}) — reuse the "
+                "original settings or start a fresh out_dir"
+            )
 
     def start(self, docs: DataFrame) -> StreamingQuery:
         self._validate_config()
@@ -803,10 +756,10 @@ class IncrementalDedupJob:
                 prior_bands = self._read_prior(spark, "index_bands", batch_id)
                 if prior_bands is not None:
                     # the signature rides the band-0 rows of the bands
-                    # table (sigs_layout 2) — deriving the sigs view from
-                    # the SAME read skips a directory listing + read
-                    # construction per batch (the filter prunes to the
-                    # one non-null sig row per doc at the parquet scan)
+                    # table — deriving the sigs view from the SAME read
+                    # skips a directory listing + read construction per
+                    # batch (the filter prunes to the one non-null sig
+                    # row per doc at the parquet scan)
                     prior_sigs = prior_bands.filter(F.col("sig").isNotNull()).select(
                         "id", "sig"
                     )
@@ -923,9 +876,9 @@ class IncrementalDedupJob:
             if self.near_dup:
                 kept_ids = kept.select(F.col("doc_id").alias("id"))
                 kept_bands = bands_df.join(kept_ids, "id", "leftsemi")
-                # sigs_layout 2 (round-21): ONE write carries bands and
-                # signatures; sig is masked to the band-0 row so each
-                # doc's signature is stored exactly once (one fewer
+                # ONE write carries bands and signatures (round-21);
+                # sig is masked to the band-0 row so each doc's
+                # signature is stored exactly once (one fewer
                 # action + one fewer dropDuplicates shuffle per batch
                 # than a separate table; banded_signatures emits every
                 # band index for every indexable doc, so band 0 is total)
@@ -942,17 +895,6 @@ class IncrementalDedupJob:
                     )
                 )
             overlap(spark, index_writes)
-            if self.span_index:
-                # record the window size the index was built with —
-                # underscore-prefixed like _bucket_spec.json, invisible
-                # to parquet listings; read-side views validate their k
-                # against it instead of silently slicing wrong text
-                marker = os.path.join(span_dir, _SPAN_SPEC_MARKER)
-                if not os.path.exists(marker):
-                    import json
-
-                    with open(marker, "w") as fh:
-                        json.dump({"span_k": self.span_k}, fh)
 
             # advance the monotone high-water mark only after every
             # table write above landed (crash-before-here = re-run
@@ -1016,14 +958,54 @@ def corpus_view(spark, out_dir: str, empty_schema=None) -> DataFrame:
 
 _SPAN_SPEC_MARKER = "_span_spec.json"
 _CORPUS_SPEC_MARKER = "_corpus_spec.json"
-# Bumped when the minhash signature scheme changes incompatibly (v1 =
-# the degenerate monotone-affine scheme, v2 = the round-10 universal
-# hash over 2^31-1): stored index_bands signatures from another version
-# never match current signatures, so _validate_config refuses to mix.
-_MINHASH_VERSION = 2
-# On-disk index layout recorded in _corpus_spec.json (see
-# _validate_config): 2 = signatures on the index_bands band-0 rows.
-_SIGS_LAYOUT = 2
+# The corpus's on-disk format, recorded in _corpus_spec.json.  Bump it
+# on ANY change that makes stored state unreadable or wrong for this
+# build: the minhash scheme (signatures/band keys from another scheme
+# never estimate correctly), the index layouts (signatures ride the
+# index_bands band-0 rows), the spec's own fields.  _read_corpus_spec
+# refuses every other version — a missing one included — so there is
+# one compatibility check, not one per layout change.
+_FORMAT_VERSION = 1
+
+
+def _dump_json_atomic(path: str, obj) -> None:
+    """Write-tmp + os.replace: a crash mid-write leaves the previous
+    file (or none), never a torn one a later read would choke on."""
+    import json
+
+    tmp = path + ".tmp"
+    with open(tmp, "w") as fh:
+        json.dump(obj, fh)
+    os.replace(tmp, path)
+
+
+def _read_corpus_spec(out_dir: str) -> dict | None:
+    """The corpus spec (_corpus_spec.json), or None before the first
+    start().  Raises ValueError unless it records this build's
+    _FORMAT_VERSION."""
+    import json
+
+    try:
+        with open(os.path.join(out_dir, _CORPUS_SPEC_MARKER)) as fh:
+            spec = json.load(fh)
+    except FileNotFoundError:
+        return None
+    if spec.get("format_version") != _FORMAT_VERSION:
+        raise ValueError(
+            f"the corpus at {out_dir} records format_version "
+            f"{spec.get('format_version')!r}, but this build reads and "
+            f"writes only format_version {_FORMAT_VERSION} — rebuild the "
+            "corpus in a fresh out_dir"
+        )
+    return spec
+
+
+def _write_corpus_spec(out_dir: str, spec: dict) -> None:
+    os.makedirs(out_dir, exist_ok=True)
+    _dump_json_atomic(
+        os.path.join(out_dir, _CORPUS_SPEC_MARKER),
+        {"format_version": _FORMAT_VERSION, **spec},
+    )
 
 
 def stored_benchmark_k(fp_dir: str) -> int | None:
@@ -1040,16 +1022,12 @@ def stored_benchmark_k(fp_dir: str) -> int | None:
 
 
 def stored_span_k(out_dir: str) -> int | None:
-    """The span_k the on-disk index was built with (None when the
-    marker predates this field or the index doesn't exist)."""
-    import json
-
-    marker = os.path.join(out_dir, "index_spanfps", _SPAN_SPEC_MARKER)
-    try:
-        with open(marker) as fh:
-            return json.load(fh).get("span_k")
-    except (OSError, ValueError):
-        return None
+    """The span_k the corpus's span index is built with, from the
+    corpus spec (None before the first start() or with span_index
+    off).  Raises ValueError on a foreign format version, so every
+    k-checking reader refuses an unreadable corpus too."""
+    spec = _read_corpus_spec(out_dir)
+    return None if spec is None else spec["span_k"]
 
 
 def merge_span_stats(partials: DataFrame) -> DataFrame:
@@ -1126,13 +1104,10 @@ def _read_monotone_watermark(out_dir: str) -> dict | None:
 
 
 def _write_monotone_watermark(out_dir: str, batch_id: int, max_id) -> None:
-    import json
-
-    path = os.path.join(out_dir, _MONOTONE_WATERMARK)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump({"batch_id": batch_id, "max_id": max_id}, fh)
-    os.replace(tmp, path)
+    _dump_json_atomic(
+        os.path.join(out_dir, _MONOTONE_WATERMARK),
+        {"batch_id": batch_id, "max_id": max_id},
+    )
 
 
 _PRUNE_PENDING = "_prune_pending"
@@ -1140,43 +1115,52 @@ _PRUNE_PENDING = "_prune_pending"
 
 def _mark_postings_pruned(path: str) -> None:
     """Write the may-be-pruned marker (idempotent, atomic).  MUST land
-    before any posting row can be dropped — see prune_span_postings and
-    record_settled_fps; semantics are 'may be pruned', so a marker with
-    zero rows actually removed only forces the conservative full-sweep
-    path on FULL cuts."""
-    import json
-
+    before any posting row can be dropped — see record_settled_fps;
+    semantics are 'may be pruned', so a marker with zero rows actually
+    removed only forces the conservative full-sweep path on FULL
+    cuts."""
     marker = os.path.join(path, _POSTINGS_PRUNED_MARKER)
     if not os.path.isfile(marker):
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({"pruned": True}, fh)
-        os.replace(tmp, marker)
+        _dump_json_atomic(marker, {"pruned": True})
 
 
 def record_settled_fps(out_dir: str, settled: "DataFrame") -> bool:
-    """FUSED pruning, record side (round-13 VERDICT task 4): persist the
-    settled fp set under the postings table so its NEXT compaction —
-    which rewrites every folded dir anyway — drops the settled rows
-    inside its resolve (IncrementalDedupJob._postings_resolve) instead
-    of finalize paying a separate per-dir count+rewrite pass
-    (prune_span_postings).  Same soundness envelope: the may-be-pruned
-    marker is written BEFORE the pending set goes live (no row can be
-    dropped without the marker), and rows linger at most one compaction
-    cadence (skipping/deferring removal is always sound — leftover
-    settled rows are never looked up by the changed-fps join).
+    """Postings pruning, record side (round-13 VERDICT task 4): persist
+    the settled fp set under the postings table so its NEXT compaction
+    — which rewrites every folded dir anyway — drops the settled rows
+    inside its resolve (IncrementalDedupJob._postings_resolve).  The
+    may-be-pruned marker is written BEFORE the pending set goes live
+    (no row can be dropped without the marker), and rows linger at
+    most one compaction cadence (skipping/deferring removal is always
+    sound — leftover settled rows are never looked up by the
+    changed-fps join).
+
+    Why the rows are dead — sound ONLY under the monotone_ids ingest
+    contract, which the caller (CuratedCorpusPipeline.finalize) gates:
+    `settled` is the qualifying span set of the generation that just
+    COMMITTED.  Under monotone ids a qualifying fp's min-(id, pos)
+    representative can never move (new docs only have larger ids) and
+    n_docs only grows, so the fp can never appear in a later delta's
+    changed set — the changed-fps -> postings join (`_redo_docs`) will
+    never look these rows up again.  The posting-pruned excision split
+    stays sound for DELTA cuts too: a redo doc is either new (its
+    posting rows are above the recording's watermark, see below) or
+    holds a changed fp (never settled, so never pruned) — either way
+    at least one live row classifies it affected, and the excision
+    itself re-fingerprints the doc's own text against the full span
+    set.  FULL cuts lose the split (old holders of settled fps are no
+    longer discoverable) — span_postings_pruned() marks the corpus so
+    finalize_frame falls back to the full sweep there.
 
     The recording also captures the monotone HIGH-WATER MARK (max
-    ingested doc_id) at cut time, and the fused removal is scoped to
-    rows with doc_id <= that mark.  This reproduces the eager prune's
-    cadence exactly: prune_span_postings only ever sees rows of docs
-    the cut just curated, but a compaction can run MID-DRAIN and would
+    ingested doc_id) at cut time, and the removal is scoped to rows
+    with doc_id <= that mark: a compaction can run MID-DRAIN and would
     otherwise delete rows of docs ingested AFTER the cut — rows the
     next delta cut's excision split still needs (a new doc whose only
     qualifying spans are settled would lose its last live row and be
     classified untouched, emitting unexcised text; caught by the
-    round-13 fused twin aging run's fold certification).  Docs above
-    the mark keep their rows until a LATER cut — which curates them —
+    round-13 twin aging run's fold certification).  Docs above the
+    mark keep their rows until a LATER cut — which curates them —
     records a higher mark.
 
     The pending set is OVERWRITTEN each cut: under the monotone-qualify
@@ -1225,7 +1209,7 @@ def record_settled_fps(out_dir: str, settled: "DataFrame") -> bool:
 
 def pending_settled_fps(spark, out_dir: str):
     """The recorded (settled fp set, max_doc_id watermark) awaiting
-    fused removal, or None.  Underscore-prefixed dir and side file, so
+    removal, or None.  Underscore-prefixed dir and side file, so
     table-level parquet reads never see either."""
     p = os.path.join(out_dir, "index_spanpostings", _PRUNE_PENDING)
     ident = _pending_prune_identity(out_dir)
@@ -1237,31 +1221,28 @@ def pending_settled_fps(spark, out_dir: str):
 _PRUNE_APPLIED = "_prune_applied.json"
 
 
-def _pending_prune_identity(
-    out_dir: str,
-) -> tuple[int, int | None, int | None] | None:
-    """(max_doc_id, batch_id, seq) identity of the pending settled-fp
-    recording, or None when there is no readable pending set.  batch_id
-    is None for recordings written before round 14 and seq is None for
-    recordings written before round 15 (identity still works — the
-    applied compare just falls back to the fields present)."""
+def _prune_identity(path: str) -> tuple[int, int, int] | None:
+    """(max_doc_id, batch_id, seq) stored in a recording's side file,
+    or None when it is absent or unreadable."""
     import json
 
+    try:
+        with open(path) as fh:
+            d = json.load(fh)
+        return int(d["max_doc_id"]), int(d["batch_id"]), int(d["seq"])
+    except (OSError, ValueError, KeyError, TypeError):
+        return None
+
+
+def _pending_prune_identity(out_dir: str) -> tuple[int, int, int] | None:
+    """(max_doc_id, batch_id, seq) identity of the pending settled-fp
+    recording, or None when there is no readable pending set."""
     p = os.path.join(out_dir, "index_spanpostings", _PRUNE_PENDING)
     if not os.path.isdir(p) or not any(
         f.endswith(".parquet") for f in os.listdir(p)
     ):
         return None
-    try:
-        with open(os.path.join(p, "_watermark.json")) as fh:
-            d = json.load(fh)
-            return (
-                int(d["max_doc_id"]),
-                int(d["batch_id"]) if "batch_id" in d else None,
-                int(d["seq"]) if "seq" in d else None,
-            )
-    except (OSError, ValueError, KeyError):
-        return None
+    return _prune_identity(os.path.join(p, "_watermark.json"))
 
 
 def _next_prune_seq(out_dir: str) -> int:
@@ -1271,37 +1252,23 @@ def _next_prune_seq(out_dir: str) -> int:
     unapplied pending recording may hand its seq out again — fine: the
     identity only needs to differ from the APPLIED mark, and a lost
     recording was never applied."""
-    prev = 0
-    for ident in (_pending_prune_identity(out_dir), _read_prune_applied(out_dir)):
-        if ident is not None and ident[2] is not None:
-            prev = max(prev, ident[2])
-    return prev + 1
+    seqs = [
+        ident[2]
+        for ident in (_pending_prune_identity(out_dir), _read_prune_applied(out_dir))
+        if ident is not None
+    ]
+    return max(seqs, default=0) + 1
 
 
-def _read_prune_applied(
-    out_dir: str,
-) -> tuple[int, int | None, int | None] | None:
+def _read_prune_applied(out_dir: str) -> tuple[int, int, int] | None:
     """Identity of the last settled-fp recording a compaction APPLIED
     (anti-join executed and its publish completed), or None."""
-    import json
-
-    try:
-        with open(
-            os.path.join(out_dir, "index_spanpostings", _PRUNE_APPLIED)
-        ) as fh:
-            d = json.load(fh)
-            return (
-                int(d["max_doc_id"]),
-                int(d["batch_id"]) if d.get("batch_id") is not None else None,
-                int(d["seq"]) if d.get("seq") is not None else None,
-            )
-    except (OSError, ValueError, KeyError):
-        return None
+    return _prune_identity(
+        os.path.join(out_dir, "index_spanpostings", _PRUNE_APPLIED)
+    )
 
 
-def _write_prune_applied(
-    out_dir: str, ident: tuple[int, int | None, int | None]
-) -> None:
+def _write_prune_applied(out_dir: str, ident: tuple[int, int, int]) -> None:
     """Mark a settled-fp recording as applied (round-14 VERDICT task 1):
     written by compact()/recover() AFTER the postings fold's publish
     completes, never inside the resolve itself — a crash between
@@ -1324,123 +1291,21 @@ def _write_prune_applied(
     new cut re-records with a different identity — the per-record seq
     guarantees "different" even at an unchanged watermark (round-14
     ADVICE) — and the join runs again."""
-    import json
-
-    marker = os.path.join(out_dir, "index_spanpostings", _PRUNE_APPLIED)
-    tmp = marker + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(
-            {"max_doc_id": ident[0], "batch_id": ident[1], "seq": ident[2]}, fh
-        )
-    os.replace(tmp, marker)
-
-
-def span_postings_pruned(out_dir: str) -> bool:
-    """True when prune_span_postings ever removed rows from this corpus
-    — the signal for a FULL finalize cut to fall back to the full
-    fingerprint sweep (settled fps' old holders are no longer
-    discoverable through the postings; delta cuts stay posting-driven,
-    see prune_span_postings)."""
-    return os.path.isfile(
-        os.path.join(out_dir, "index_spanpostings", _POSTINGS_PRUNED_MARKER)
+    _dump_json_atomic(
+        os.path.join(out_dir, "index_spanpostings", _PRUNE_APPLIED),
+        {"max_doc_id": ident[0], "batch_id": ident[1], "seq": ident[2]},
     )
 
 
-def recover_pruned_postings(out_dir: str) -> None:
-    """Finish a prune rewrite a crash interrupted: for every staged
-    `_prune_inprog_<dir>` either publish it (the target dir already
-    moved aside) or discard it (the target is intact); stale trash is
-    always dropped.  One listdir when nothing crashed."""
-    import re
-    import shutil
-
-    path = os.path.join(out_dir, "index_spanpostings")
-    if not os.path.isdir(path):
-        return
-    for d in os.listdir(path):
-        m = re.fullmatch(r"_prune_inprog_(.+)", d)
-        if m:
-            target = os.path.join(path, m.group(1))
-            if os.path.isdir(target):
-                shutil.rmtree(os.path.join(path, d))
-            else:
-                os.rename(os.path.join(path, d), target)
-        elif re.fullmatch(r"_prune_trash_.+", d):
-            shutil.rmtree(os.path.join(path, d), ignore_errors=True)
-
-
-def prune_span_postings(
-    spark, out_dir: str, settled: DataFrame, min_removed_frac: float = 0.0
-) -> int:
-    """Delete posting rows of SETTLED span fingerprints (round-12
-    VERDICT task 4) — sound ONLY under the monotone_ids ingest
-    contract, which the caller (CuratedCorpusPipeline.finalize) gates.
-
-    Why the rows are dead: `settled` is the qualifying span set of the
-    generation that just COMMITTED.  Under monotone ids a qualifying
-    fp's min-(id, pos) representative can never move (new docs only
-    have larger ids) and n_docs only grows, so the fp can never appear
-    in a later delta's changed set — the changed-fps -> postings join
-    (`_redo_docs`) will never look these rows up again.  The
-    posting-pruned excision split stays sound for DELTA cuts too: a
-    redo doc is either new (its posting rows were written after this
-    prune) or holds a changed fp (never settled, so never pruned) —
-    either way at least one live row classifies it affected, and the
-    excision itself re-fingerprints the doc's own text against the
-    full span set.  FULL cuts lose the split (old holders of settled
-    fps are no longer discoverable) — span_postings_pruned() marks the
-    corpus so finalize_frame falls back to the full sweep there.
-
-    Mechanics: per batch-partition rewrite through a staged-rename pair
-    (write `_prune_inprog_<d>` complete, move `<d>` aside, move staged
-    in, drop trash) — the same two-rename publish as the compaction
-    refold; recover_pruned_postings finishes a crashed swap.  Runs
-    stream-stopped.  Returns rows removed.
-
-    Cost control: each cut already pays one O(postings) SCAN for the
-    redo join, but a rewrite costs ~2-3x a scan, so a dir is only
-    rewritten when the removable fraction is at least
-    `min_removed_frac` (0 = any removal).  Skipping is always sound:
-    leftover settled rows are never looked up by the changed-fps join
-    and at worst classify a few extra docs onto the delta sweep path.
-    Size the threshold to the corpus's boilerplate skew — the rows
-    this prune targets are the heavy-tailed posting lists of
-    template/license spans (one fp shared by millions of docs); the
-    unique-window tail is irreducible by correctness (a sub-threshold
-    fp may still qualify later and must find its old holders)."""
-    import shutil
-
-    path = os.path.join(out_dir, "index_spanpostings")
-    if not os.path.isdir(path):
-        return 0
-    recover_pruned_postings(out_dir)
-    settled = settled.select("fp")
-    removed = 0
-    for d in sorted(os.listdir(path)):
-        if not d.startswith("batch_id="):
-            continue
-        full = os.path.join(path, d)
-        cur = spark.read.parquet(full)
-        keep = cur.join(settled, "fp", "left_anti")
-        n_before, n_after = cur.count(), keep.count()
-        if n_after == n_before or (
-            n_before and (n_before - n_after) / n_before < min_removed_frac
-        ):
-            continue
-        # Marker BEFORE the first rewrite (round-13 ADVICE): a crash
-        # after a dir's two-rename swap but before a trailing marker
-        # would leave a partially pruned index that a later FULL cut
-        # would still posting-split, silently emitting unexcised text.
-        _mark_postings_pruned(path)
-        inprog = os.path.join(path, f"_prune_inprog_{d}")
-        trash = os.path.join(path, f"_prune_trash_{d}")
-        shutil.rmtree(inprog, ignore_errors=True)
-        keep.write.mode("overwrite").parquet(inprog)
-        os.rename(full, trash)
-        os.rename(inprog, full)
-        shutil.rmtree(trash)
-        removed += n_before - n_after
-    return removed
+def span_postings_pruned(out_dir: str) -> bool:
+    """True once record_settled_fps has armed pruning on this corpus —
+    the signal for a FULL finalize cut to fall back to the full
+    fingerprint sweep (settled fps' old holders are no longer
+    discoverable through the postings; delta cuts stay posting-driven,
+    see record_settled_fps)."""
+    return os.path.isfile(
+        os.path.join(out_dir, "index_spanpostings", _POSTINGS_PRUNED_MARKER)
+    )
 
 
 def common_spans_view(
@@ -1457,8 +1322,9 @@ def common_spans_view(
     time — batch-identical output (e2e-tested) at per-query cost
     independent of how many batches built the index.  `k` must match
     the job's span_k (fingerprints of different window sizes don't
-    mix) — validated against the on-disk _span_spec.json marker, so a
-    mismatch raises instead of silently slicing wrong span_text."""
+    mix) — validated against the corpus spec (stored_span_k), so a
+    mismatch, or a corpus of another format version, raises instead
+    of silently slicing wrong span_text."""
     from real_time_financial_market_data_pipeline_spark.operators.dedup import (
         common_spans_from_stats,
         merged_common_spans_from_stats,

@@ -8,20 +8,14 @@ set (clean / dup-free / byte-preserving) at full scale.
     python scripts/curation_scale.py [base_sf_dir] [out_json] \
         [n_replicas] [n_batches] [legs] [curated_max_gens] [monotone]
 
-Round-13 (VERDICT task 4): `monotone=2` selects the fused prune — since
-round 14 via the AUTO default (prune_fused is left unset; monotone +
-compact_every make it fused) — finalize only RECORDS the settled set and the
-postings table's own compaction (compact_every=9 here) drops the rows
-inside the rewrite it performs anyway; compare `finalize_s` and
-`postings_rows` against a `monotone=1` (eager) twin.
-
-Round-12 (VERDICT task 4): `monotone` (0/1, default 0) opts into the
-monotone-doc_id ingest contract — the generator's ids are already
-strictly increasing in drain order — so every finalize prunes the
-span-postings inverted index down to the not-yet-settled fps; each
-leg records `postings_rows` so a monotone-vs-default pair of runs
-shows the bounded-index claim with the same view ≡ recompute
-certification.
+`monotone` (0/1, default 0) opts into the monotone-doc_id ingest
+contract — the generator's ids are already strictly increasing in drain
+order — so every finalize records the settled span set and the postings
+table's own compaction (compact_every=9 here) drops those rows inside
+the rewrite it performs anyway, bounding the span-postings inverted
+index to the not-yet-settled fps.  Each leg records `postings_rows`, so
+a monotone-vs-default pair of runs shows the bounded-index claim with
+the same view ≡ recompute certification.
 
 Round-11 (VERDICT task 3): one finalize per leg, so legs = cuts; with
 legs >= 12 and curated_max_gens lowered (e.g. 5) at least two
@@ -84,7 +78,7 @@ BOILER = (
 )
 # round-12: the boilerplate-HEAVY variant (argv[9]) carries a longer
 # license-style block — more qualifying windows per carrier, the
-# heavy-tailed posting lists prune_span_postings targets.  Distinct
+# heavy-tailed posting lists the postings prune targets.  Distinct
 # sentences (no internal repeats) so keep-first repair never fires on it.
 BOILER_LONG = (
     BOILER
@@ -201,12 +195,7 @@ def main() -> None:
     if len(sys.argv) > 5:
         LEGS = int(sys.argv[5])
     curated_max_gens = int(sys.argv[6]) if len(sys.argv) > 6 else 8
-    mono_arg = int(sys.argv[7]) if len(sys.argv) > 7 else 0
-    monotone = mono_arg >= 1
-    # mono=2 exercises the round-14 DEFAULT (prune_fused=None, auto →
-    # fused because monotone + compact_every are both set); mono=1 pins
-    # the eager twin with an explicit opt-out
-    prune_fused = None if mono_arg == 2 else False
+    monotone = bool(int(sys.argv[7])) if len(sys.argv) > 7 else False
     global BOILER_EVERY
     if len(sys.argv) > 8:
         BOILER_EVERY = int(sys.argv[8])
@@ -236,7 +225,6 @@ def main() -> None:
             compact_every=9,
             curated_max_gens=curated_max_gens,
             monotone_ids=monotone,
-            prune_fused=prune_fused,
         )
         durs: list[float] = []
         legs: list[dict] = []
@@ -351,7 +339,6 @@ def main() -> None:
             "invariant_duplicate_fingerprints": n_dup_fp,
             "full_recompute_s": full_recompute_s,
             "monotone_ids": monotone,
-            "prune_fused": prune_fused,
             "final_postings_rows": legs[-1]["postings_rows"],
             "view_vs_full_recompute_diff_rows": n_only_view + n_only_full,
         }

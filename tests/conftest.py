@@ -38,9 +38,7 @@ HEAVY_TESTS = {
     "test_curation_pipeline.py::test_delta_cut_refuses_changed_finalize_settings",
     "test_curation_pipeline.py::test_delta_publish_after_refinalize_full_cut",
     "test_curation_pipeline.py::test_delta_publish_filename_guard_falls_back_to_full",
-    "test_curation_pipeline.py::test_eager_prune_crash_sweep_per_dir_swap_atomic",
     "test_curation_pipeline.py::test_finalize_recovers_crashed_compaction_before_reading_history",
-    "test_curation_pipeline.py::test_flat_layout_reset_also_clears_stale_commit_markers",
     "test_curation_pipeline.py::test_fold_crash_state_enumeration_reader_invariant",
     "test_curation_pipeline.py::test_fold_under_concurrent_reader_and_grace_sweep",
     "test_curation_pipeline.py::test_fused_prune_applied_mark_skips_repeat_compactions",
@@ -48,9 +46,9 @@ HEAVY_TESTS = {
     "test_curation_pipeline.py::test_incremental_finalize_equals_full_recompute",
     "test_curation_pipeline.py::test_monotone_ids_postings_pruning_sound_and_bounded",
     "test_curation_pipeline.py::test_postings_compaction_crash_sweep_recovers_fused_prune",
-    "test_curation_pipeline.py::test_publish_and_prune_crash_recovery_paths",
     "test_curation_pipeline.py::test_publish_bucketed_delta_reuses_untouched_buckets",
     "test_curation_pipeline.py::test_publish_bucketed_republish_under_concurrent_reader",
+    "test_curation_pipeline.py::test_publish_crash_leaves_only_inprog_debris",
     "test_curation_pipeline.py::test_refinalize_applies_new_policy_like_a_fresh_corpus",
     "test_curation_pipeline.py::test_refinalize_lower_min_docs_reprunes_despite_applied_mark",
     "test_curation_pipeline.py::test_refinalize_restores_policy_on_failed_cut",

@@ -511,17 +511,20 @@ def test_final_line_carries_driver_contract_and_fits_budget():
 def test_final_line_sheds_optional_scalars_before_touching_queries():
     import json
 
-    # ~120 synthetic entries blow the budget; optional scalars drop
-    # (in declared order) while queries/sf/metric survive intact
+    # ~120 synthetic entries under a budget that shedding scalars alone
+    # can meet: optional scalars drop (in declared order) while
+    # queries/sf/metric survive intact
     timings = {f"entry_with_a_rather_long_name_{i:03d}": round(1.0 + i * 0.017, 3) for i in range(120)}
-    line = bench.build_final_line(timings, 0.1, _digest_fixture())
+    unpressured = bench.build_final_line(timings, 0.1, _digest_fixture(), budget=10**6)
+    budget = len(unpressured) - 200
+    line = bench.build_final_line(timings, 0.1, _digest_fixture(), budget=budget)
+    assert len(line) <= budget
     obj = json.loads(line)
-    assert obj["queries"] == timings or obj["queries"] == {
-        n: round(t, 2) for n, t in timings.items()
-    }
+    assert obj["queries"] == timings and "_elided" not in obj
     assert obj["sf"] == 0.1 and obj["unit"] == "sec"
     dropped = [k for k in bench._FINAL_OPTIONAL_KEYS if k not in obj]
     kept = [k for k in bench._FINAL_OPTIONAL_KEYS if k in obj]
+    assert dropped and kept
     # drop-first order respected: everything dropped precedes everything kept
     assert bench._FINAL_OPTIONAL_KEYS[: len(dropped)] == dropped, (dropped, kept)
 
@@ -531,11 +534,17 @@ def test_final_line_last_resort_rerounds_queries_to_2_decimals():
 
     timings = {f"very_long_query_entry_name_padding_{i:04d}": 123.456 for i in range(200)}
     line = bench.build_final_line(timings, 0.1, _digest_fixture(), budget=1990)
+    assert len(line) <= 1990
     obj = json.loads(line)
     # every optional scalar gone, queries re-rounded, contract intact
     assert all(k not in obj for k in bench._FINAL_OPTIONAL_KEYS)
     assert obj["queries"]["very_long_query_entry_name_padding_0000"] == 123.46
     assert obj["metric"] == "headline_queries_total" and obj["sf"] == 0.1
+    # still over budget after re-rounding: trailing entries are elided
+    # into a count, leading entries kept
+    assert 0 < len(obj["queries"]) < len(timings)
+    assert len(obj["queries"]) + obj["_elided"] == len(timings)
+    assert list(obj["queries"]) == list(timings)[: len(obj["queries"])]
 
 
 def test_needs_batch_third_rep_trigger_rule():

@@ -675,53 +675,6 @@ def test_delta_cut_refuses_changed_finalize_settings(spark, tmp_path):
     )
 
 
-def test_flat_layout_reset_also_clears_stale_commit_markers(spark, tmp_path):
-    """Round-10 ADVICE: clearing a legacy flat curated/ layout must
-    reset the finalize_state commit markers TOGETHER with the rows.
-    Scenario: a generational corpus (gens 0+1 committed) is clobbered
-    by pre-generational code writing a flat split=* layout; the next
-    new-code finalize rebuilds gen 0 — if the stale docs/gen=1 marker
-    survived, curated_view's latest-generation-wins join would let the
-    (now row-less) gen 1 supersede the fresh gen-0 rows and those docs
-    would silently vanish from the view."""
-    from real_time_financial_market_data_pipeline_spark.sources.streaming import read_doc_stream
-    from real_time_financial_market_data_pipeline_spark.streaming.curation import _committed_generations
-
-    feed, out = str(tmp_path / "feed"), str(tmp_path / "out")
-    _write_feed(
-        feed,
-        [[{"doc_id": 10, "text": CARRIER_A}, {"doc_id": 20, "text": LONG_B}]],
-    )
-    pipe = CuratedCorpusPipeline(out_dir=out, span_k=4, span_min_docs=2)
-    q = pipe.start(read_doc_stream(spark, feed).select("doc_id", "text"))
-    assert q.awaitTermination(300)
-    pipe.finalize(spark)  # gen 0 (full)
-
-    _write_feed(feed, [[{"doc_id": 30, "text": DOC40}]], prefix="late")
-    q = pipe.start(read_doc_stream(spark, feed).select("doc_id", "text"))
-    assert q.awaitTermination(300)
-    pipe.finalize(spark)  # gen 1 (delta: doc 30)
-    assert _committed_generations(out) == [0, 1]
-    expected = _sorted_rows(curated_view(spark, out))
-
-    # simulate the pre-generational clobber: old code overwrote
-    # curated/ with a flat split=* layout, leaving finalize_state's
-    # gen markers behind
-    import shutil
-
-    flat = pipe.finalize_frame(spark)
-    shutil.rmtree(pipe.curated_dir())
-    flat.write.mode("overwrite").partitionBy("split").parquet(pipe.curated_dir())
-    assert _committed_generations(out) == [0, 1]  # stale markers linger
-
-    # new-code finalize: detects the flat layout, resets rows AND
-    # markers together, rebuilds gen 0 — nothing vanishes
-    pipe.finalize(spark)
-    assert _committed_generations(out) == [0]
-    assert _sorted_rows(curated_view(spark, out)) == expected
-    assert {r["doc_id"] for r in expected} == {10, 20, 30}
-
-
 def test_finalize_recovers_crashed_compaction_before_reading_history(
     spark, tmp_path, monkeypatch
 ):
@@ -1287,7 +1240,9 @@ def test_monotone_ids_postings_pruning_sound_and_bounded(spark, tmp_path):
     in curated_view after every cut — including the critical post-prune
     scenario (a NEW doc holding an already-settled boilerplate fp must
     still be excised, via its own post-prune posting rows) — while A's
-    postings table holds strictly fewer rows.  A full refinalize on the
+    postings table holds strictly fewer rows.  compact_every=1 makes the
+    ingest job's inline compaction — which applies each cut's recorded
+    settled set — run on every drained batch.  A full refinalize on the
     pruned corpus falls back to the fingerprint sweep and stays
     correct."""
     from real_time_financial_market_data_pipeline_spark.sources.streaming import read_doc_stream
@@ -1310,14 +1265,9 @@ def test_monotone_ids_postings_pruning_sound_and_bounded(spark, tmp_path):
 
     def build(name: str, monotone: bool, finalize_each: bool) -> CuratedCorpusPipeline:
         feed, out = str(tmp_path / f"{name}_feed"), str(tmp_path / f"{name}_out")
-        # prune_fused=False: this test pins the EAGER prune form (rows
-        # removed at finalize itself); the round-14 auto default would
-        # otherwise select fused here (monotone + compact_every) and
-        # defer removal to the next compaction — covered by
-        # test_fused_prune_rides_compaction_and_stays_equivalent
         pipe = CuratedCorpusPipeline(
             out_dir=out, span_k=4, span_min_docs=2, monotone_ids=monotone,
-            prune_fused=False,
+            compact_every=1,
         )
         for i, batch in enumerate(batches):
             _write_feed(feed, [batch], prefix=f"b{i}")
@@ -1393,22 +1343,10 @@ def test_monotone_ids_violation_fails_the_stream(spark, tmp_path):
         q.awaitTermination(300)
 
 
-def test_publish_and_prune_crash_recovery_paths(spark, tmp_path):
-    """Round-12 crash-path pins for the new protocols:
-    (a) a crashed publish leaves only `_publish_inprog` debris — the
-        live table keeps serving and the next publish clears it;
-    (b) a prune swap interrupted between its two renames (batch dir
-        moved aside, staged dir not yet in) is finished by
-        recover_pruned_postings — no posting rows are lost;
-    (c) a stale staged prune dir whose target is intact is discarded."""
-    import shutil
-
-    from real_time_financial_market_data_pipeline_spark.sources.streaming import read_doc_stream
-    from real_time_financial_market_data_pipeline_spark.streaming.incremental import (
-        recover_pruned_postings,
-        span_postings_view,
-    )
-
+def test_publish_crash_leaves_only_inprog_debris(spark, tmp_path):
+    """Round-12 crash-path pin: a crashed publish leaves only
+    `_publish_inprog` debris — the live table keeps serving and the
+    next publish clears it."""
     pipe = _publish_pipe(spark, tmp_path, "crashpub")
     table = "crashpub_serving_t"
     pipe.publish_bucketed(spark, table=table, n_buckets=4)
@@ -1416,7 +1354,7 @@ def test_publish_and_prune_crash_recovery_paths(spark, tmp_path):
         (r["doc_id"], r["chunk_idx"]) for r in spark.table(table).collect()
     )
 
-    # (a) crash mid-publish: staged dir exists, catalog untouched
+    # crash mid-publish: staged dir exists, catalog untouched
     root = pipe._serving_root(table)
     inprog = os.path.join(root, "_publish_inprog")
     os.makedirs(inprog, exist_ok=True)
@@ -1431,40 +1369,6 @@ def test_publish_and_prune_crash_recovery_paths(spark, tmp_path):
         (r["doc_id"], r["chunk_idx"]) for r in spark.table(table).collect()
     ) == before
 
-    # (b)+(c): prune-swap recovery on the postings table — eager form
-    # (the _prune_inprog_* swap states are the eager rewrite's; fused
-    # removal rides the compaction publish protocol instead)
-    mono = CuratedCorpusPipeline(
-        out_dir=str(tmp_path / "mono_out"), span_k=4, span_min_docs=2,
-        monotone_ids=True, prune_fused=False,
-    )
-    feed = str(tmp_path / "mono_feed")
-    _write_feed(
-        feed,
-        [[{"doc_id": 10, "text": CARRIER_A}, {"doc_id": 11, "text": CARRIER_B},
-          {"doc_id": 20, "text": LONG_B}]],
-    )
-    q = mono.start(read_doc_stream(spark, feed).select("doc_id", "text"))
-    assert q.awaitTermination(300)
-    mono.finalize(spark)  # commits + prunes (BOILER settles)
-    post = os.path.join(mono.out_dir, "index_spanpostings")
-    n_rows = span_postings_view(spark, mono.out_dir).count()
-    dirs = [d for d in os.listdir(post) if d.startswith("batch_id=")]
-    assert dirs
-    d = dirs[0]
-    # simulate the crash between the two renames: target moved aside,
-    # staged dir holds the full rewrite
-    shutil.copytree(os.path.join(post, d), os.path.join(post, f"_prune_inprog_{d}"))
-    shutil.move(os.path.join(post, d), os.path.join(post, f"_prune_trash_{d}"))
-    recover_pruned_postings(mono.out_dir)
-    assert os.path.isdir(os.path.join(post, d))
-    assert not os.path.isdir(os.path.join(post, f"_prune_trash_{d}"))
-    assert span_postings_view(spark, mono.out_dir).count() == n_rows
-    # (c) stale staged dir with intact target: discarded
-    shutil.copytree(os.path.join(post, d), os.path.join(post, f"_prune_inprog_{d}"))
-    recover_pruned_postings(mono.out_dir)
-    assert not os.path.isdir(os.path.join(post, f"_prune_inprog_{d}"))
-    assert span_postings_view(spark, mono.out_dir).count() == n_rows
     spark.sql(f"DROP TABLE IF EXISTS `{table}`")
 
 
@@ -1486,21 +1390,22 @@ def test_delta_publish_after_refinalize_full_cut(spark, tmp_path):
 
 
 def test_prune_marker_written_before_first_rewrite(spark, tmp_path):
-    """Round-13 ADVICE (medium): a crash after the first batch dir's
-    prune swap but before a TRAILING marker write would leave a
-    partially pruned index with span_postings_pruned() == False — a
-    later FULL cut would then take the postings-split branch and
-    silently emit old holders of settled fps unexcised.  The marker
-    must land BEFORE the first rewrite ("may be pruned" semantics); a
-    marker with zero rows actually removed is sound (it only forces
-    the conservative full sweep)."""
+    """Round-13 ADVICE (medium), against record_settled_fps: the
+    may-be-pruned marker must be down BEFORE the pending settled set
+    goes live — otherwise a compaction could drop posting rows while
+    span_postings_pruned() is still False, and a later FULL cut would
+    take the postings-split branch and silently emit old holders of
+    settled fps unexcised.  A crash at the final rename (staged set ->
+    `_prune_pending`) leaves the marker down and NO pending set (rows
+    merely linger until the next cut re-records; sound)."""
     import pytest
 
     from real_time_financial_market_data_pipeline_spark.streaming.incremental import (
-        prune_span_postings,
-        recover_pruned_postings,
+        _PRUNE_PENDING,
+        _write_monotone_watermark,
+        pending_settled_fps,
+        record_settled_fps,
         span_postings_pruned,
-        span_postings_view,
     )
 
     out = str(tmp_path / "idx")
@@ -1509,37 +1414,42 @@ def test_prune_marker_written_before_first_rewrite(spark, tmp_path):
         spark.createDataFrame(
             [(100 + i, 1), (999, 2)], "fp long, doc_id long"
         ).write.parquet(os.path.join(post, f"batch_id={i}"))
-
-    # no qualifying removal -> NO marker (unprofitable cuts keep the
-    # postings-split available for full cuts)
-    assert prune_span_postings(spark, out, spark.createDataFrame([(777,)], "fp long")) == 0
-    assert not span_postings_pruned(out)
-
-    # crash DURING the first dir's swap (target dir -> trash rename):
-    # the marker must already be down
     settled = spark.createDataFrame([(999,)], "fp long")
-    real_rename = os.rename
 
-    def crashing_rename(src, dst):
-        if "_prune_trash_" in str(dst):
-            raise RuntimeError("simulated crash mid prune swap")
+    # no watermark yet -> nothing can be scoped: no recording, NO marker
+    assert record_settled_fps(out, settled) is False
+    assert not span_postings_pruned(out)
+    assert pending_settled_fps(spark, out) is None
+
+    _write_monotone_watermark(out, 1, 2)
+    final = os.path.join(post, _PRUNE_PENDING)
+    real_rename = os.rename
+    seen = []
+
+    def observing_rename(src, dst):
+        if os.path.normpath(str(dst)) == os.path.normpath(final):
+            # the pending set is about to go live: the marker must
+            # already be down
+            seen.append(span_postings_pruned(out))
+            raise RuntimeError("simulated crash at the pending-set rename")
         return real_rename(src, dst)
 
-    os.rename = crashing_rename
+    os.rename = observing_rename
     try:
         with pytest.raises(RuntimeError, match="simulated crash"):
-            prune_span_postings(spark, out, settled)
+            record_settled_fps(out, settled)
     finally:
         os.rename = real_rename
-    assert span_postings_pruned(out)  # pre-fix: False (silent unsoundness)
-
-    # recovery + re-run: rows of the settled fp leave both dirs
-    recover_pruned_postings(out)
-    assert span_postings_view(spark, out).count() == 4  # nothing lost
-    assert prune_span_postings(spark, out, settled) == 2
+    assert seen == [True]
     assert span_postings_pruned(out)
-    rows = {(r["fp"], r["doc_id"]) for r in span_postings_view(spark, out).collect()}
-    assert rows == {(100, 1), (101, 1)}
+    assert pending_settled_fps(spark, out) is None
+
+    # the re-run records the set; the posting rows are untouched until
+    # a compaction applies it
+    assert record_settled_fps(out, settled) is True
+    fps, max_doc_id = pending_settled_fps(spark, out)
+    assert [r["fp"] for r in fps.collect()] == [999] and max_doc_id == 2
+    assert spark.read.parquet(post).count() == 4
 
 
 def test_publish_retention_spares_catalog_snapshot_over_debris(spark, tmp_path):
@@ -1753,18 +1663,14 @@ def test_auto_publish_serving_never_stale_across_cuts_and_fold(spark, tmp_path):
 
 
 def test_fused_prune_rides_compaction_and_stays_equivalent(spark, tmp_path):
-    """Round-13 VERDICT task 4: prune_fused=True records the settled fp
-    set at each cut (record_settled_fps) and the postings table's own
-    compaction — a rewrite it performs anyway — drops those rows inside
-    its resolve, replacing the eager per-dir count+rewrite pass.  Twin
-    guarantee unchanged from the eager form: curated_view stays
+    """Round-13 VERDICT task 4: with monotone_ids, finalize records the
+    settled fp set at each cut (record_settled_fps) and the postings
+    table's own compaction — a rewrite it performs anyway — drops those
+    rows inside its resolve.  Twin guarantee: curated_view stays
     row-identical to an unpruned twin and a from-scratch recompute
     after every cut, including the post-prune excision scenario (a NEW
-    doc holding an already-settled fp), while the fused corpus's
-    postings table ends strictly smaller.  Fused without a compaction
-    cadence is refused (rows would never be removed)."""
-    import pytest
-
+    doc holding an already-settled fp), while the pruned corpus's
+    postings table ends strictly smaller."""
     from real_time_financial_market_data_pipeline_spark.sources.streaming import read_doc_stream
     from real_time_financial_market_data_pipeline_spark.streaming.incremental import (
         pending_settled_fps,
@@ -1800,13 +1706,8 @@ def test_fused_prune_rides_compaction_and_stays_equivalent(spark, tmp_path):
 
     # compact_every=1: inline compaction fires every batch, so each
     # cut's recorded settled set is swept by the very next drain.
-    # prune_fused is NOT passed: round 14 made fused the AUTO default
-    # whenever monotone_ids + compact_every hold — this twin run pins
-    # the DEFAULT path, not an opt-in.
     a = build("fused", monotone_ids=True, compact_every=1)
-    assert a._prune_fused_effective is True
     b = build("plain", monotone_ids=False, compact_every=1)
-    assert b._prune_fused_effective is False  # no monotone contract
 
     rows_a = _sorted_rows(curated_view(spark, a.out_dir))
     rows_b = _sorted_rows(curated_view(spark, b.out_dir))
@@ -1856,26 +1757,20 @@ def test_fused_prune_rides_compaction_and_stays_equivalent(spark, tmp_path):
     d40 = [r for r in rows_a2 if r["doc_id"] == 40]
     assert d40 and all(BOILER2 not in r["text"] for r in d40)
 
-    # misconfiguration is refused at CONSTRUCTION (round-14 ADVICE: the
-    # old finalize-time check could let a misconfigured pipeline run
-    # many cuts — or forever, with monotone_ids=False silently ignoring
-    # the flag — before surfacing)
+
+def test_monotone_ids_without_compaction_cadence_is_refused(tmp_path):
+    """The postings prune rides the compaction rewrite, so monotone_ids
+    without a compact_every cadence would record settled rows that are
+    never removed — refused at CONSTRUCTION instead of at a later cut."""
+    import pytest
+
     with pytest.raises(ValueError, match="compact_every"):
         CuratedCorpusPipeline(
-            out_dir=str(tmp_path / "bad_out"), span_k=4, span_min_docs=2,
-            monotone_ids=True, prune_fused=True, compact_every=None,
+            out_dir=str(tmp_path / "bad_out"), monotone_ids=True, compact_every=None
         )
-    with pytest.raises(ValueError, match="monotone_ids"):
-        CuratedCorpusPipeline(
-            out_dir=str(tmp_path / "bad_out2"), span_k=4, span_min_docs=2,
-            monotone_ids=False, prune_fused=True, compact_every=1,
-        )
-    # the auto default degrades gracefully instead: no cadence → eager
-    auto_eager = CuratedCorpusPipeline(
-        out_dir=str(tmp_path / "auto_out"), span_k=4, span_min_docs=2,
-        monotone_ids=True, compact_every=None,
-    )
-    assert auto_eager._prune_fused_effective is False
+    # either half alone is a valid configuration
+    CuratedCorpusPipeline(out_dir=str(tmp_path / "a"), monotone_ids=False, compact_every=None)
+    CuratedCorpusPipeline(out_dir=str(tmp_path / "b"), monotone_ids=True, compact_every=1)
 
 
 def test_fused_prune_applied_mark_skips_repeat_compactions(spark, tmp_path):
@@ -1900,7 +1795,6 @@ def test_fused_prune_applied_mark_skips_repeat_compactions(spark, tmp_path):
         out_dir=out, span_k=4, span_min_docs=2,
         monotone_ids=True, compact_every=100,
     )
-    assert pipe._prune_fused_effective is True  # the round-14 auto default
 
     def drain(batches, prefix):
         _write_feed(feed, batches, prefix=prefix)
@@ -2056,7 +1950,6 @@ def test_replayed_uncommitted_batch_settled_rows_linger_soundly(spark, tmp_path)
         out_dir=out, span_k=4, span_min_docs=2,
         monotone_ids=True, compact_every=100,
     )
-    assert pipe._prune_fused_effective is True
 
     def drain(batch=None, prefix=None):
         if batch is not None:
@@ -2201,7 +2094,6 @@ def test_refinalize_lower_min_docs_reprunes_despite_applied_mark(spark, tmp_path
         out_dir=out, span_k=4, span_min_docs=3,
         monotone_ids=True, compact_every=100,
     )
-    assert pipe._prune_fused_effective is True
     for i, batch in enumerate(batches):
         _write_feed(feed, [batch], prefix=f"b{i}")
         q = pipe.start(
@@ -2414,7 +2306,6 @@ def test_postings_compaction_crash_sweep_recovers_fused_prune(spark, tmp_path):
         out_dir=out, span_k=4, span_min_docs=2,
         monotone_ids=True, compact_every=100,
     )
-    assert pipe._prune_fused_effective is True
 
     def drain(batches, prefix):
         _write_feed(feed, batches, prefix=prefix)
@@ -2713,107 +2604,3 @@ def test_serving_publish_crash_sweep_catalog_reads_survive(spark, tmp_path):
             assert not os.path.isdir(os.path.join(root, "_publish_inprog"))
 
     spark.sql(f"DROP TABLE IF EXISTS `{T}`")
-
-
-def test_eager_prune_crash_sweep_per_dir_swap_atomic(spark, tmp_path):
-    """Crash-point sweep of the EAGER prune path (prune_span_postings's
-    per-dir two-rename swap + recover_pruned_postings) — the non-fused
-    twin of the postings-compaction sweep above, for cadence-less
-    corpora.  At every mutation, after recovery alone: every batch dir
-    is atomically either its original or its exactly-pruned rewrite
-    (never torn, never lost), any extra rows beyond the twin are
-    settled-fp rows only, and the may-be-pruned marker is already down
-    whenever at least one row has been removed (the round-13 ADVICE
-    ordering, here asserted at every crash point).  A re-run then
-    converges to the crash-free twin with no staged debris."""
-    import shutil
-
-    from crashsweep import _FsCrasher, _SimCrash
-
-    import pytest as _pytest
-
-    from real_time_financial_market_data_pipeline_spark.streaming.incremental import (
-        prune_span_postings,
-        recover_pruned_postings,
-        span_postings_pruned,
-        span_postings_view,
-    )
-
-    out = str(tmp_path / "idx")
-    post = os.path.join(out, "index_spanpostings")
-    per_dir_orig, per_dir_pruned = {}, {}
-    for i in range(3):
-        rows = [(100 + i, 1), (999, 200 + i)]
-        spark.createDataFrame(rows, "fp long, doc_id long").write.parquet(
-            os.path.join(post, f"batch_id={i}")
-        )
-        per_dir_orig[i] = set(rows)
-        per_dir_pruned[i] = {(100 + i, 1)}
-    settled = spark.createDataFrame([(999,)], "fp long")
-    orig_set = set().union(*per_dir_orig.values())
-    settled_set = {(999, 200 + i) for i in range(3)}
-
-    pristine = str(tmp_path / "pristine")
-    shutil.copytree(out, pristine)
-
-    def view_set():
-        return {
-            (r["fp"], r["doc_id"])
-            for r in span_postings_view(spark, out).collect()
-        }
-
-    # crash-free counted twin
-    with _FsCrasher(post) as c:
-        assert prune_span_postings(spark, out, settled) == 3
-    n_mutations = c.count
-    assert n_mutations >= 10, n_mutations
-    twin_set = view_set()
-    assert twin_set == set().union(*per_dir_pruned.values())
-
-    for k in range(1, n_mutations + 1):
-        shutil.rmtree(out)
-        shutil.copytree(pristine, out)
-        with _FsCrasher(post) as c:
-            c.crash_at = k
-            with _pytest.raises(_SimCrash):
-                prune_span_postings(spark, out, settled)
-
-        # DOUBLE CRASH: recovery itself crashes mid-swap-finish (its
-        # publish rename / trash drop are mutations too), then runs
-        # clean — must land in the same atomic per-dir states
-        with _FsCrasher(post) as c2:
-            c2.crash_at = 1
-            try:
-                recover_pruned_postings(out)
-            except _SimCrash:
-                pass
-        recover_pruned_postings(out)
-        recover_pruned_postings(out)  # recovery is idempotent
-        rows = view_set()
-        assert twin_set <= rows <= orig_set, f"crash at {k}: rows lost"
-        assert rows - twin_set <= settled_set, (
-            f"crash at {k}: non-settled rows differ from the twin"
-        )
-        if rows != orig_set:  # at least one row removed -> marker down
-            assert span_postings_pruned(out), (
-                f"crash at {k}: rows removed without the marker"
-            )
-        for i in range(3):  # per-dir atomicity: original XOR pruned
-            d = {
-                (r["fp"], r["doc_id"])
-                for r in spark.read.parquet(
-                    os.path.join(post, f"batch_id={i}")
-                ).collect()
-            }
-            assert d in (per_dir_orig[i], per_dir_pruned[i]), (
-                f"crash at {k}: dir {i} torn: {sorted(d)}"
-            )
-
-        # re-run converges; no staged debris
-        prune_span_postings(spark, out, settled)
-        assert view_set() == twin_set, f"crash at {k}: re-run diverged"
-        assert span_postings_pruned(out)
-        assert not any(
-            d.startswith(("_prune_inprog_", "_prune_trash_"))
-            for d in os.listdir(post)
-        )

@@ -71,8 +71,8 @@ def test_incremental_dedup_exact_and_near(spark, tmp_path):
     assert kept == [1, 3, 6]
 
     # the index holds bands+sigs for exactly the kept (indexable) docs
-    # (sigs_layout 2: the signature rides the band-0 rows of the bands
-    # table; no separate index_sigs dir exists on a fresh corpus)
+    # (the signature rides the band-0 rows of the bands table; no
+    # separate index_sigs dir exists on a fresh corpus)
     bands = spark.read.parquet(os.path.join(out, "index_bands"))
     assert set(r["id"] for r in bands.select("id").distinct().collect()) == {1, 3, 6}
     assert not os.path.isdir(os.path.join(out, "index_sigs"))
@@ -453,7 +453,7 @@ def test_incremental_span_index_matches_batch_recompute(spark, tmp_path):
     # and the treatment did something: non-rep carriers lost the boiler
     assert any(r[2] > 0 for r in from_index)
 
-    # a k that doesn't match the on-disk _span_spec marker raises
+    # a k that doesn't match the span_k the corpus spec locks raises
     # instead of silently slicing wrong span_text
     import pytest
 
@@ -1037,27 +1037,82 @@ def test_pooled_index_writes_keep_query_job_group(spark, tmp_path):
     assert not ungrouped, f"jobs outside the query's job group: {sorted(ungrouped)}"
 
 
-def test_corpus_with_other_sigs_layout_is_refused(spark, tmp_path):
-    """sigs_layout 2 (signatures on the index_bands band-0 rows) is the
-    only on-disk index layout: a corpus whose _corpus_spec.json records
-    another layout — or none, i.e. built before the field existed with
-    a separate signature table — is refused at start() with a
-    ValueError naming the layout, instead of failing mid-batch on the
-    missing `sig` column."""
+def test_corpus_of_other_format_version_is_refused(spark, tmp_path, monkeypatch):
+    """_corpus_spec.json records the corpus format_version; a spec with
+    any other version — or none, i.e. written by a build from before
+    the field existed — is refused with a ValueError by every entry
+    point that reads the corpus: start(), finalize() (before its
+    crash recovery touches anything) and common_spans_view."""
     import pytest
 
     from real_time_financial_market_data_pipeline_spark.sources.streaming import read_doc_stream
+    from real_time_financial_market_data_pipeline_spark.streaming.curation import (
+        CuratedCorpusPipeline,
+    )
+    from real_time_financial_market_data_pipeline_spark.streaming.incremental import (
+        common_spans_view,
+        stored_span_k,
+    )
 
     feed, out = str(tmp_path / "feed"), str(tmp_path / "out")
     _write_doc_feed(feed, [[{"doc_id": 1, "text": LONG_A}]])
-    _drain(spark, feed, out)
+    pipe = CuratedCorpusPipeline(out_dir=out, span_k=4)
+    pipe.job()._validate_config()
     marker = os.path.join(out, "_corpus_spec.json")
-    spec = json.load(open(marker))
-    assert spec["sigs_layout"] == 2
+    with open(marker) as fh:
+        spec = json.load(fh)
+    assert stored_span_k(out) == 4
 
+    def no_recover(self, spark):
+        raise AssertionError("finalize ran recover() before the format check")
+
+    monkeypatch.setattr(IncrementalDedupJob, "recover", no_recover)
     docs = read_doc_stream(spark, feed).select("doc_id", "text")
-    for stored in ({**spec, "sigs_layout": 1}, {k: v for k, v in spec.items() if k != "sigs_layout"}):
+    missing = {k: v for k, v in spec.items() if k != "format_version"}
+    for stored in (missing, {**spec, "format_version": 99}):
         with open(marker, "w") as fh:
             json.dump(stored, fh)
-        with pytest.raises(ValueError, match="sigs_layout"):
-            IncrementalDedupJob(out_dir=out).start(docs)
+        with pytest.raises(ValueError, match="format_version"):
+            pipe.start(docs)
+        with pytest.raises(ValueError, match="format_version"):
+            pipe.finalize(spark)
+        with pytest.raises(ValueError, match="format_version"):
+            common_spans_view(spark, out, k=4)
+
+    # this build's own spec still validates
+    with open(marker, "w") as fh:
+        json.dump(spec, fh)
+    pipe.job()._validate_config()
+
+
+def test_corpus_spec_write_survives_a_crash_mid_dump(tmp_path, monkeypatch):
+    """A crash while the corpus spec (or finalize's _finalize_spec.json)
+    is being written must not leave a torn file that fails every later
+    start() (or delta cut) with a JSON parse error: both writers stage
+    to a tmp file and rename it into place."""
+    import pytest
+
+    from real_time_financial_market_data_pipeline_spark.streaming.curation import (
+        CuratedCorpusPipeline,
+    )
+
+    def crash(*args, **kwargs):
+        raise RuntimeError("simulated crash inside json.dump")
+
+    out = str(tmp_path / "out")
+    job = IncrementalDedupJob(out_dir=out, span_index=True, span_k=6)
+    with monkeypatch.context() as m:
+        m.setattr(json, "dump", crash)
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            job._validate_config()
+    job._validate_config()  # writes the spec the crash lost
+    job._validate_config()  # and the written spec validates
+    with open(os.path.join(out, "_corpus_spec.json")) as fh:
+        assert json.load(fh)["span_k"] == 6
+
+    pipe = CuratedCorpusPipeline(out_dir=out)
+    with monkeypatch.context() as m:
+        m.setattr(json, "dump", crash)
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            pipe._write_finalize_spec()
+    pipe._check_finalize_spec()
