@@ -343,9 +343,10 @@ class MedallionStreamJob:
         checked = with_validation_errors(
             bronze_stream.withWatermark("event_time", self.watermark)
         )
+        q_dead = None
         if self.dead_letters:
             dead = dead_letter_records(checked.filter(F.size("errors") > 0))
-            mgr.add(
+            q_dead = mgr.add(
                 parquet_file_sink(
                     dead,
                     os.path.join(self.out_dir, "dead_letters"),
@@ -367,6 +368,11 @@ class MedallionStreamJob:
             )
         )
         _await_if_sequential(q_silver)
+        if q_dead is not None:
+            # the dead-letter layer reads bronze beside silver: awaiting it
+            # surfaces its failure from start() and keeps it from
+            # outliving the drain
+            _await_if_sequential(q_dead)
 
         # gold: stream the silver TABLE.  Both rollup granularities read
         # silver (already reduced by validation+dedup), never the raw

@@ -18,9 +18,10 @@ primary-key upsert the reference relied on
 from __future__ import annotations
 
 import os
+import shutil
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
@@ -69,7 +70,8 @@ def parquet_sink(
     compact_every: int | None = None,
     compact_keys: list[str] | None = None,
 ) -> StreamingQuery:
-    """foreachBatch parquet writer: empty-batch early-exit, date partitioning.
+    """foreachBatch parquet writer: one Spark job per micro-batch, date
+    partitioning.
 
     Idempotent under replay: each micro-batch lands in its own
     `batch_id=<n>` directory with OVERWRITE mode, so a batch re-run
@@ -77,6 +79,20 @@ def parquet_sink(
     of appending duplicates (deterministic-batch-id idempotence — the
     lake equivalent of the reference's primary-key upserts). Readers of
     `path` see `batch_id` as a discovered partition column.
+
+    The write is the batch's only Spark action: every action inside
+    foreachBatch re-executes the micro-batch plan (for update-mode
+    layers, the stateful aggregate or Python state function), so an
+    emptiness check before the write would run the batch twice.  The
+    row count rides on the write as a `pyspark.sql.Observation`; a
+    batch that observed 0 rows has its just-written `batch_id=<n>` dir
+    removed and never reaches the reader manifest, so an empty batch
+    leaves no dir and no manifest entry.  Crash contract: a crash
+    between an empty batch's write and that removal leaves an
+    unmanifested dir holding no rows (one schema-only file when
+    unpartitioned).  The replayed batch overwrites and removes it,
+    manifest-routed readers never name it, and a compaction fold of it
+    adds no rows.
 
     `compact_every` + `compact_keys` enable INLINE auto-compaction for
     update-mode sinks: every N-th micro-batch first folds all PRIOR
@@ -115,12 +131,15 @@ def parquet_sink(
                 only_below=batch_id,
                 defer_retire=True,
             )
-        if batch_df.isEmpty():
-            return
-        writer = batch_df.write.mode("overwrite")
+        rows = Observation()
+        writer = batch_df.observe(rows, F.count(F.lit(1)).alias("n")).write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
-        writer.parquet(os.path.join(path, f"batch_id={batch_id}"))
+        batch_dir = os.path.join(path, f"batch_id={batch_id}")
+        writer.parquet(batch_dir)
+        if rows.get["n"] == 0:
+            shutil.rmtree(batch_dir)
+            return
         # manifest AFTER the data: a crash between leaves an on-disk dir
         # the manifest doesn't name yet — the replayed batch overwrites
         # it and re-adds (idempotent); manifest-routed readers just see
@@ -167,11 +186,10 @@ def parquet_file_sink(
 ) -> StreamingQuery:
     """Native parquet streaming file sink for APPEND layers — the
     idiomatic scale path: the whole batch commit runs JVM-side (no
-    per-batch Python callback, no pre-write isEmpty job), and
-    exactly-once comes from the sink's `_spark_metadata` manifest
-    (a replayed batch id is detected and skipped, and readers only see
-    manifest-committed files, never in-progress ones).  Measured here:
-    ~2x lower per-micro-batch overhead than the foreachBatch writer.
+    per-batch Python callback), and exactly-once comes from the sink's
+    `_spark_metadata` manifest (a replayed batch id is detected and
+    skipped, and readers only see manifest-committed files, never
+    in-progress ones).
 
     Use `parquet_sink` (foreachBatch + batch_id dirs) only where
     update-mode upsert semantics are needed (gold aggregates resolved
@@ -608,7 +626,6 @@ def compact_latest_state(
     Returns the number of batch directories folded.
     """
     import re
-    import shutil
 
     def _in_scope(batch_id: int) -> bool:
         return only_below is None or batch_id < only_below
@@ -775,7 +792,6 @@ def _finish_publish(
     touched."""
     import json
     import re
-    import shutil
 
     retired = os.path.join(path, "_compact_retired")
     tgt = os.path.join(path, f"batch_id={max_id}")
@@ -919,7 +935,6 @@ def compact_gold_bucketed(
     uncommitted replayable tail) — there is nothing publishable yet.
     """
     import re
-    import shutil
 
     # a crash between the refold branch's rename(snap, trash) and its
     # rmtree(trash) strands the OLD snapshot under _compact_trash — and
@@ -997,8 +1012,6 @@ def compact_gold_bucketed(
         # than proportional to file count; a crash between the renames
         # leaves the staged dir, which the next compact_latest_state
         # call finishes publishing.
-        import shutil
-
         max_id = int(snap_dirs[0].split("=")[1])
         inprog = os.path.join(path, "_compact_inprogress")
         trash = os.path.join(path, "_compact_trash")

@@ -2,7 +2,8 @@
 overlapped Spark actions go through `streaming.sinks.overlap` (the only
 thread pool in the package), the corpus spec `_corpus_spec.json` has
 one reader and one writer (so one format-version check guards every
-on-disk layout), and one-off per-round scripts are folded into their
+on-disk layout), `parquet_sink` runs one Spark action per micro-batch
+(its write), and one-off per-round scripts are folded into their
 general tool (e.g. `scripts/dump_plans.py --round N`)."""
 
 from __future__ import annotations
@@ -12,7 +13,7 @@ from pathlib import Path
 
 REPO = Path(__file__).resolve().parents[1]
 PACKAGE = REPO / "real_time_financial_market_data_pipeline_spark"
-OVERLAP_HOME = PACKAGE / "streaming" / "sinks.py"
+SINKS = PACKAGE / "streaming" / "sinks.py"
 SPEC_HOME = PACKAGE / "streaming" / "incremental.py"
 SPEC_IO = {"_read_corpus_spec", "_write_corpus_spec"}
 
@@ -35,13 +36,13 @@ def test_thread_pools_only_in_overlap_helper():
     offenders = [
         str(p.relative_to(REPO))
         for p in sorted(PACKAGE.rglob("*.py"))
-        if p != OVERLAP_HOME and _imports_concurrent_futures(p)
+        if p != SINKS and _imports_concurrent_futures(p)
     ]
     assert not offenders, (
         f"concurrent.futures imported outside streaming/sinks.py: {offenders} — "
         "overlap independent actions with streaming.sinks.overlap instead"
     )
-    assert _imports_concurrent_futures(OVERLAP_HOME)
+    assert _imports_concurrent_futures(SINKS)
 
 
 def _corpus_spec_uses(path: Path) -> list[tuple[str | None, int]]:
@@ -94,6 +95,15 @@ def test_corpus_spec_has_one_reader_and_one_writer():
     uses = _corpus_spec_uses(SPEC_HOME)
     assert [f for f, _ in uses].count(None) == 1, uses  # the one definition
     assert {f for f, _ in uses} - {None} == SPEC_IO, uses
+
+
+def test_update_sink_has_no_pre_write_action():
+    # inside foreachBatch every action re-runs the micro-batch plan; the
+    # sink's row count rides on its write as an Observation instead
+    assert "isEmpty(" not in SINKS.read_text(), (
+        "isEmpty( in streaming/sinks.py: an emptiness check before the "
+        "write runs the stateful batch twice — observe the count on the write"
+    )
 
 
 def test_no_per_round_scripts():

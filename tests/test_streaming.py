@@ -274,6 +274,37 @@ def test_dead_letters_routed_not_silvered(spark, feed_and_out):
     assert silver.filter((F.col("price") <= 0) | (F.col("volume") <= 0)).count() == 0
 
 
+def test_chained_drain_raises_when_dead_letter_layer_fails(spark, feed_and_out, monkeypatch):
+    """A sequential chained drain awaits its dead-letter layer: a failure
+    there is raised from start() instead of staying on the query handle."""
+    from real_time_financial_market_data_pipeline_spark.streaming import jobs
+
+    dead_letter_records = jobs.dead_letter_records
+    monkeypatch.setattr(
+        jobs,
+        "dead_letter_records",
+        lambda dead: dead_letter_records(dead).withColumn(
+            "original", F.raise_error(F.lit("dead-letter layer failed")).cast("string")
+        ),
+    )
+    feed_dir, out_dir = feed_and_out
+    write_feed(
+        feed_dir,
+        [
+            [
+                {"s": "AAPL", "p": 150.25, "v": 100, "t": T0},
+                {"s": "AAPL", "p": 0.0, "v": 10, "t": T0 + 300},  # invalid
+            ]
+        ],
+    )
+    try:
+        with pytest.raises(Exception, match="dead-letter layer failed"):
+            MedallionStreamJob(out_dir=out_dir).start(read_trade_stream(spark, feed_dir))
+    finally:
+        for q in spark.streams.active:
+            q.stop()
+
+
 def test_chained_medallion_single_source_read(spark, feed_and_out):
     """start_chained: silver reads the bronze TABLE and gold reads
     silver (one source scan total); layer contents match the fan-out
